@@ -697,7 +697,7 @@ _DOC_ROW_OVERHEAD_BYTES = 64
 _GRAM_BROADCAST_MAX_BYTES = 256 << 20
 
 
-def _base_stats(base: DataFrame, id_col: str) -> tuple[int, int]:
+def _base_stats(base: DataFrame) -> tuple[int, int]:
     """(n_docs, est_gram_bytes) in the ONE materializing pass over the
     persisted per-doc gram table (replaces the plain ``count()``):
     est = Σ_docs (row overhead + Σ_grams (octet_length + gram overhead)).
@@ -735,7 +735,7 @@ def _ngram_candidate_pairs(
     # verification joins — persist + eager materialize so parallel first
     # stages don't race-recompute the n-gram arrays
     base = base.persist()
-    n_docs, est_bytes = _base_stats(base, id_col)
+    n_docs, est_bytes = _base_stats(base)
     posting = base.select(F.col(id_col), F.explode("_ng").alias("_g"))
     rare = (
         posting.groupBy("_g").count().filter(F.col("count") <= max_df).drop("count")
@@ -839,7 +839,7 @@ def prefix_filter_jaccard_pairs(
         F.col(id_col), _word_ngrams(text_col, n).alias("_ng")
     )
     base = base.persist()
-    n_docs, est_bytes = _base_stats(base, id_col)
+    n_docs, est_bytes = _base_stats(base)
     posting = base.select(
         F.col(id_col), F.size("_ng").alias("_s"), F.explode("_ng").alias("_g")
     )

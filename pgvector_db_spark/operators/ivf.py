@@ -6,9 +6,12 @@ demo/aws_rds_similarity_search_demo.py:134-139) clusters vectors into
 ``lists`` k-means cells, then probes the ``nprobe`` nearest cells at query
 time. The Spark-native re-expression:
 
-  build:  MLlib KMeans (cosine) on (optionally sampled) vectors
-          → assign every row its nearest-centroid ``list_id`` (JVM-side
-            model.transform — no Python boundary)
+  build:  k-means over a bounded hash-ordered sample of the table, run
+          on the driver (seeded Lloyd over max(2048, 50 * lists) rows —
+          pgvector's ivfflat also fits its lists on a sample)
+          → assign every row its nearest-center ``list_id`` with ONE
+            map-side argmin over a broadcast centers row (no shuffle, no
+            Python boundary; ``append`` uses the same kernel)
           → write the dataset ``partitionBy("list_id")`` + a small
             centroids parquet.
   search: rank centroids against the query driver-side (lists ≤ a few
@@ -16,9 +19,10 @@ time. The Spark-native re-expression:
           ``nprobe`` partitions (Catalyst partition pruning on
           ``list_id IN (...)``) and run the exact top-k kernel within.
 
-Scale: the expensive build is one KMeans fit (sampled) + one partitioned
-write; a search touches nprobe/lists of the data — on a 1000-executor
-cluster that is the difference between a 100 TB scan and a 1 TB scan.
+Scale: the expensive build is one bounded sample collect + one
+assignment pass + one partitioned write; a search touches nprobe/lists
+of the data — on a 1000-executor cluster that is the difference between
+a 100 TB scan and a 1 TB scan.
 Recall/latency tradeoff is exactly pgvector's ``nprobe`` semantics; with
 ``nprobe = lists`` results equal the exact path (tested).
 """
@@ -70,117 +74,50 @@ class IVFIndex:
         lists: int = 100,
         vec_col: str = "embedding",
         id_col: str = "vec_id",
-        sample_fraction: float | None = None,
         seed: int = 42,
         metric: str = "cosine",
         centroids: list[list[float]] | None = None,
     ) -> IVFIndex:
         """CREATE INDEX ... USING ivfflat analogue.
 
-        ``sample_fraction`` bounds the KMeans fit input (pgvector likewise
-        samples for list creation); assignment always covers every row.
         ``metric`` mirrors the ivfflat operator classes:
         ``cosine``/``l2``/``ip`` for vector_cosine_ops / vector_l2_ops /
-        vector_ip_ops (reference README.md:185 uses cosine). l2 and ip
-        cluster with euclidean KMeans, matching pgvector's ivfflat which
-        also builds IP indexes from l2 k-means cells.
+        vector_ip_ops (reference README.md:185 uses cosine).
 
-        ``centroids``: precomputed list centers (e.g. from
-        :func:`deterministic_sample_centroids`). Skips the MLlib fit —
-        MLlib KMeans results depend on the session's partition layout
-        even when seeded, so an oracle whose constants encode recall
-        against a FRESH build needs centers that are a pure function of
-        the data. Assignment is the same in-plan argmin ``append`` uses
-        (distance fold + (dist, list_id) tie-break — deterministic per
-        row regardless of partitioning).
+        List centers come, as in pgvector, from k-means over a sample of
+        the table: :func:`deterministic_sample_centroids` (spherical for
+        cosine; euclidean for l2 and ip, as pgvector builds ip lists from
+        l2 k-means), a pure function of the data whatever the session's
+        partitioning. ``centroids`` supplies precomputed centers instead.
+        Every row then gets its nearest center's ``list_id`` from
+        :func:`_assign_lists`, the same map-side argmin ``append`` uses.
         """
         if metric not in ("cosine", "l2", "ip"):
             raise ValueError(f"unsupported metric: {metric}")
-        if centroids is not None and len(centroids) != lists:
+        if centroids is None:
+            centroids = deterministic_sample_centroids(
+                df, lists, vec_col=vec_col, id_col=id_col, seed=seed,
+                metric="cosine" if metric == "cosine" else "l2",
+            )
+        elif len(centroids) != lists:
             # silent mismatch would skew every downstream nprobe/curve
             # computation keyed to `lists`
             raise ValueError(
                 f"explicit centroids ({len(centroids)}) != lists ({lists}); "
                 f"pass lists=len(centroids)"
             )
-        from pgvector_db_spark.functions.vector import l2_norm
-
+        centers = [[float(x) for x in c] for c in centroids]
         spark = df.sparkSession
-        if centroids is not None:
-            from pyspark.sql.window import Window
-
-            from pgvector_db_spark.functions.vector import (
-                cosine_distance,
-                l2_distance,
-            )
-
-            cents = local_rows_df(
-                spark,
-                [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-                "list_id int, _centroid array<double>",
-            )
-            if metric == "cosine":
-                dist = cosine_distance(F.col(vec_col), F.col("_centroid"))
-            else:
-                dist = l2_distance(F.col(vec_col), F.col("_centroid"))
-            w = Window.partitionBy(id_col).orderBy(
-                F.col("_dist").asc(), F.col("list_id").asc()
-            )
-            assigned = (
-                df.join(F.broadcast(cents))
-                .withColumn("_dist", dist)
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_dist", "_rn", "_centroid")
-                .withColumn("_vnorm", l2_norm(F.col(vec_col)))
-            )
-            centers = [[float(x) for x in c] for c in centroids]
-        else:
-            from pyspark.ml.clustering import KMeans
-            from pyspark.ml.functions import array_to_vector
-
-            featured = df.withColumn(
-                "_features", array_to_vector(F.col(vec_col))
-            )
-            fit_input = featured
-            if sample_fraction is not None and sample_fraction < 1.0:
-                fit_input = featured.sample(
-                    fraction=sample_fraction, seed=seed
-                )
-            model = KMeans(
-                k=lists,
-                seed=seed,
-                featuresCol="_features",
-                predictionCol="list_id",
-                distanceMeasure=(
-                    "cosine" if metric == "cosine" else "euclidean"
-                ),
-            ).fit(fit_input)
-            # Materialize each row's l2 norm in the layout: searches then
-            # pay ONE fold per row (the dot product) instead of
-            # re-deriving the norm per comparison — bitwise-identical
-            # distances (same fold + sqrt as the on-the-fly path), so the
-            # exact-path oracle holds.
-            assigned = (
-                model.transform(featured)
-                .drop("_features")
-                .withColumn("_vnorm", l2_norm(F.col(vec_col)))
-            )
-            centers = [
-                [float(x) for x in c] for c in model.clusterCenters()
-            ]
         (
-            assigned.repartition("list_id")
+            _assign_lists(df, centers, metric, vec_col)
+            .repartition("list_id")
             .write.mode("overwrite")
             .partitionBy("list_id")
             .parquet(os.path.join(path, "data"))
         )
-
-        centroids = [
-            (i, c, metric) for i, c in enumerate(centers)
-        ]
         local_rows_df(
-            spark, centroids,
+            spark,
+            [(i, c, metric) for i, c in enumerate(centers)],
             "list_id int, centroid array<double>, metric string",
         ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
 
@@ -197,51 +134,19 @@ class IVFIndex:
         """INSERT-into-indexed-table analogue: pgvector's ivfflat assigns
         each newly inserted row to its nearest EXISTING list center and
         never refits centroids on insert — identically here: new rows get
-        a ``list_id`` from the frozen centroids and are appended into the
-        matching partitions of the layout.
+        a ``list_id`` from the frozen centroids (:func:`_assign_lists`,
+        the kernel ``build`` uses) and are appended into the matching
+        partitions of the layout.
 
-        Assignment is a broadcast nested-loop over ``lists`` centroids
-        (`B x lists` distance folds for a batch of B rows — the same work
-        KMeans.transform does at build) followed by a per-row argmin; the
-        append shuffles only the new batch, never touches existing data
-        files. Heavily skewed/drifted inserts degrade recall exactly as
-        they do in pgvector — rebuild (``build``) is the remedy there and
-        here.
+        The append shuffles only the new batch, never touches existing
+        data files. Heavily skewed/drifted inserts degrade recall exactly
+        as they do in pgvector — rebuild (``build``) is the remedy there
+        and here.
         """
-        from pyspark.sql.window import Window
-
-        from pgvector_db_spark.functions.vector import (
-            cosine_distance,
-            l2_distance,
-            l2_norm,
-        )
-
-        metric = self.metric
-        cents = local_rows_df(
-            self.spark,
-            [(lid, c) for lid, c, _ in self._centroids()],
-            "list_id int, _centroid array<double>",
-        )
-        # cosine cells assign by cosine distance; l2 AND ip cells both
-        # assign by euclidean (matching build(), which clusters ip with
-        # euclidean KMeans exactly as pgvector does)
-        if metric == "cosine":
-            dist = cosine_distance(F.col(self.vec_col), F.col("_centroid"))
-        else:
-            dist = l2_distance(F.col(self.vec_col), F.col("_centroid"))
-        w = Window.partitionBy(self.id_col).orderBy(
-            F.col("_dist").asc(), F.col("list_id").asc()
-        )
-        assigned = (
-            df.join(F.broadcast(cents))
-            .withColumn("_dist", dist)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_dist", "_rn", "_centroid")
-            .withColumn("_vnorm", l2_norm(F.col(self.vec_col)))
-        )
+        centers = [c for _, c, _ in sorted(self._centroids())]
         (
-            assigned.repartition("list_id")
+            _assign_lists(df, centers, self.metric, self.vec_col)
+            .repartition("list_id")
             .write.mode("append")
             .partitionBy("list_id")
             .parquet(self.data_path)
@@ -272,7 +177,7 @@ class IVFIndex:
                     (
                         r["list_id"],
                         list(r["centroid"]),
-                        math.sqrt(sum(x * x for x in r["centroid"])),
+                        _fold_norm(r["centroid"]),
                     )
                     for r in rows
                 ],
@@ -487,15 +392,9 @@ class IVFIndex:
         centroids per query in Python. Returns (probe_df, probed_lists)
         so the caller can statically prune the layout scan."""
 
-        def _qnorm(vec: list[float]) -> float:
-            acc = 0.0
-            for x in vec:  # same sequential fold as l2_norm's aggregate
-                acc += x * x
-            return math.sqrt(acc)
-
         qrows = queries.select(q_id_col, q_vec_col).collect()
         pairs = [
-            (r[q_id_col], lid, qv, _qnorm(qv))
+            (r[q_id_col], lid, qv, _fold_norm(qv))
             for r in qrows
             for qv in [[float(x) for x in r[q_vec_col]]]
             for lid, _ in self._rank_lists(qv)[:nprobe]
@@ -859,27 +758,28 @@ def deterministic_sample_centroids(
     lists: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    sample: int = 2048,
-    iters: int = 10,
     seed: int = 42,
     metric: str = "cosine",
 ) -> list[list[float]]:
-    """List centers as a PURE FUNCTION of the data: a hash-ORDERED
-    bounded sample — ``ORDER BY xxhash64(id), id LIMIT sample`` — is a
-    deterministic pseudo-random draw (id-ordered sampling would bias
-    toward low ids: an appended batch living in a high id range would
-    never be sampled and its region never get a center), fit with
-    seeded driver-side Lloyd (operators/pq._kmeans); driver memory is
-    bounded by ``sample`` at any table size. Unlike MLlib KMeans —
-    whose seeded result still varies with the session's partition
-    layout — these centers are identical across any session shape, so
-    recall measured against a fresh build of them can be pinned as an
-    oracle constant.
+    """List centers as a PURE FUNCTION of the data — pgvector's ivfflat
+    build, which runs k-means over a sample of about 50 rows per list.
+
+    A hash-ORDERED bounded sample — ``ORDER BY xxhash64(id), id LIMIT
+    max(2048, 50 * lists)`` — is a deterministic pseudo-random draw
+    (id-ordered sampling would bias toward low ids: an appended batch
+    living in a high id range would never be sampled and its region
+    never get a center), fit with seeded driver-side Lloyd
+    (operators/pq._kmeans). Driver memory is bounded by the sample at
+    any table size, and the centers are identical across any session
+    shape, so recall measured against a fresh build of them can be
+    pinned as an oracle constant. Fewer sampled rows than ``lists``
+    give one center per row.
 
     For ``metric="cosine"`` the sample rows are L2-normalized before
     Lloyd (spherical k-means: euclidean centers over unit vectors rank
     directions, which is what the cosine probe order needs — raw-scale
-    euclidean centers would cluster by magnitude).
+    euclidean centers would cluster by magnitude); a zero-norm row has
+    no direction and is rejected.
     """
     import numpy as np
 
@@ -888,15 +788,107 @@ def deterministic_sample_centroids(
     pdf = (
         df.select(id_col, vec_col)
         .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(sample)
+        .limit(max(2048, 50 * lists))
         .toPandas()
     )
+    dims = sorted({len(v) for v in pdf[vec_col]})
+    if len(dims) > 1:
+        raise ValueError(f"ivf: {vec_col} rows differ in dim: {dims}")
     x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
     if metric == "cosine":
         norms = np.sqrt((x * x).sum(axis=1, keepdims=True))
-        x = x / np.where(norms == 0.0, 1.0, norms)
+        if (norms == 0.0).any():
+            raise ValueError(
+                f"ivf: zero-norm {vec_col} has no cosine distance"
+            )
+        x = x / norms
     rng = np.random.RandomState(seed)
-    return [[float(v) for v in c] for c in _kmeans(x, lists, iters, rng)]
+    return [[float(v) for v in c] for c in _kmeans(x, lists, 10, rng)]
+
+
+def _fold_norm(vec: list[float]) -> float:
+    """sqrt of the sequential float64 sum of squares: the same fold, and
+    so the same bits, as :func:`functions.vector.l2_norm`."""
+    acc = 0.0
+    for x in vec:
+        acc += x * x
+    return math.sqrt(acc)
+
+
+def _assign_lists(
+    df: DataFrame, centers: list[list[float]], metric: str, vec_col: str
+) -> DataFrame:
+    """``df`` plus ``_vnorm`` (the row's l2 norm) and ``list_id`` (the
+    index of its nearest center): the one assignment kernel of ``build``
+    and ``append``.
+
+    A map-side argmin with no shuffle (the shape of queries.py
+    ``_km_best_expr``): the centers ride as ONE broadcast
+    ``array<struct<list_id, centroid, cnorm>>`` row and each row takes
+    ``array_min`` over its (distance, list_id) structs, so ties break to
+    the lower list_id. Cosine cells use the row's ``_vnorm``, computed
+    once, with the driver-folded center norms —
+    :func:`cosine_distance_precomputed`, bitwise-equal to
+    ``cosine_distance``. l2 AND ip cells both assign by euclidean
+    distance, matching the sample fit. The layout keeps ``_vnorm`` so
+    searches pay ONE fold per row (the dot product).
+
+    A row whose dim differs from the centers' — which ``zip_with`` would
+    pad with nulls — and, under cosine, a zero-norm row raise in-plan,
+    like ``knn()``'s dimension guard: no extra job.
+    """
+    from pgvector_db_spark.functions.vector import (
+        cosine_distance_precomputed,
+        l2_distance,
+        l2_norm,
+    )
+
+    dim = len(centers[0])
+    cents = [(i, c, _fold_norm(c)) for i, c in enumerate(centers)]
+    if metric == "cosine" and any(cn == 0.0 for _, _, cn in cents):
+        raise ValueError("ivf: zero-norm list center has no cosine distance")
+    cents_df = local_rows_df(
+        df.sparkSession,
+        [(cents,)],
+        "_cents array<struct<list_id: int, centroid: array<double>,"
+        " cnorm: double>>",
+    )
+    vec, vnorm = F.col(vec_col), F.col("_vnorm")
+    if metric == "cosine":
+        def dist(c):
+            return cosine_distance_precomputed(
+                vec, c["centroid"], vnorm, c["cnorm"]
+            )
+    else:
+        def dist(c):
+            return l2_distance(vec, c["centroid"])
+    nearest = F.array_min(
+        F.transform(
+            "_cents",
+            lambda c: F.struct(dist(c).alias("d"), c["list_id"].alias("l")),
+        )
+    )["l"]
+    if metric == "cosine":
+        nearest = F.when(vnorm != 0.0, nearest).otherwise(
+            F.raise_error(
+                F.lit(f"ivf: zero-norm {vec_col} has no cosine distance")
+            )
+        )
+    list_id = F.when(F.size(vec) == dim, nearest).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"ivf: {vec_col} dim "),
+                F.coalesce(F.size(vec).cast("string"), F.lit("null")),
+                F.lit(f" != index dim {dim}"),
+            )
+        )
+    )
+    return (
+        df.crossJoin(F.broadcast(cents_df))
+        .withColumn("_vnorm", l2_norm(vec))
+        .withColumn("list_id", list_id)
+        .drop("_cents")
+    )
 
 
 def _probe_cost(idx: IVFIndex, queries: DataFrame, nprobe: int,
@@ -1116,10 +1108,8 @@ def ivf_rebuild_decision(
     ranking and its neighbors' assignments — similar for any
     equally-coarse center set), so the decision keys on balance, with
     recall REPORTED and gated only by a no-collapse tolerance. All
-    decision inputs are deterministic integers: centers come from
-    :func:`deterministic_sample_centroids` (a pure function of the
-    data — MLlib KMeans varies with session partitioning even when
-    seeded) and assignment is the per-row argmin.
+    decision inputs are deterministic integers: ``build``'s centers are
+    a pure function of the data and assignment is the per-row argmin.
 
     Audit row:
       n_base, n_appended, nprobe,
@@ -1148,11 +1138,8 @@ def ivf_rebuild_decision(
     def _ck(df1):
         return df1.localCheckpoint(eager=True)
 
-    base_cents = deterministic_sample_centroids(
-        base, lists, vec_col=vec_col, id_col=id_col
-    )
     idx = IVFIndex.build(
-        base, f"{workdir}/idx", lists=lists, centroids=base_cents
+        base, f"{workdir}/idx", lists=lists, vec_col=vec_col, id_col=id_col
     )
     before = _ck(
         idx.autoprobe_curve(queries_before, k)
@@ -1185,11 +1172,8 @@ def ivf_rebuild_decision(
         )
     )
 
-    full_cents = deterministic_sample_centroids(
-        full, lists, vec_col=vec_col, id_col=id_col
-    )
     idx2 = IVFIndex.build(
-        full, f"{workdir}/idx2", lists=lists, centroids=full_cents
+        full, f"{workdir}/idx2", lists=lists, vec_col=vec_col, id_col=id_col
     )
     rebuilt = _ck(
         idx2.autoprobe_curve(queries_after, k, exact=exact)

@@ -159,17 +159,34 @@ def _atomic_cached_build(path: str, ready: str, build) -> str:
 
 
 def _ivf_cache(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
-    """The shared seeded lists=8 IVF layout for ``sf_dir`` (atomic)."""
+    """The shared seeded lists=8 IVF layout for ``sf_dir`` (atomic).
+
+    Its centers come from an MLlib ``KMeans`` fit over the whole table,
+    not from ``IVFIndex.build``'s sampled Lloyd: vs_ivf_autoprobe's
+    pinned ``chosen_nprobe`` was measured on these cells."""
     import tempfile
 
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
     from pgvector_db_spark.operators.ivf import IVFIndex
+
+    def build(p: str) -> None:
+        featured = emb.withColumn(
+            "_features", array_to_vector(F.col("embedding"))
+        )
+        centers = (
+            KMeans(k=8, seed=42, featuresCol="_features",
+                   distanceMeasure="cosine")
+            .fit(featured)
+            .clusterCenters()
+        )
+        IVFIndex.build(emb, p, lists=len(centers), centroids=centers)
 
     path = os.path.join(
         tempfile.gettempdir(), f"ivf_cache_{_fixture_tag(sf_dir)}"
     )
-    return _atomic_cached_build(
-        path, "centroids", lambda p: IVFIndex.build(emb, p, lists=8)
-    )
+    return _atomic_cached_build(path, "centroids", build)
 
 
 def _ivf_metric_cache(
@@ -178,17 +195,13 @@ def _ivf_metric_cache(
     """The shared lists=8 IVF layout under ``metric`` (atomic) — the
     vector_l2_ops / vector_ip_ops operator-class analogues of
     :func:`_ivf_cache` (reference README.md:185 index family). Centers
-    come from :func:`deterministic_sample_centroids` (not an MLlib
-    fit): seeded MLlib KMeans varies with the session's partition
-    layout, so curve constants pinned against a fresh MLlib build could
-    flip in a session with different parallelism — these centers are a
-    pure function of the data (r10 ADVICE)."""
+    come from ``IVFIndex.build``'s sampled Lloyd, a pure function of the
+    data: seeded MLlib KMeans varies with the session's partition
+    layout, so curve constants pinned against it could flip in a
+    session with different parallelism (r10 ADVICE)."""
     import tempfile
 
-    from pgvector_db_spark.operators.ivf import (
-        IVFIndex,
-        deterministic_sample_centroids,
-    )
+    from pgvector_db_spark.operators.ivf import IVFIndex
 
     path = os.path.join(
         tempfile.gettempdir(),
@@ -197,15 +210,7 @@ def _ivf_metric_cache(
     return _atomic_cached_build(
         path,
         "centroids",
-        lambda p: IVFIndex.build(
-            emb,
-            p,
-            lists=8,
-            metric=metric,
-            centroids=deterministic_sample_centroids(
-                emb, 8, metric="l2"
-            ),
-        ),
+        lambda p: IVFIndex.build(emb, p, lists=8, metric=metric),
     )
 
 
@@ -3345,11 +3350,7 @@ def vs_ivf_health_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from pgvector_db_spark.operators.ivf import (
-        IVFIndex,
-        deterministic_sample_centroids,
-        ivf_health_report,
-    )
+    from pgvector_db_spark.operators.ivf import IVFIndex, ivf_health_report
 
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
@@ -3368,12 +3369,7 @@ def vs_ivf_health_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.select("vec_id", "embedding", "label")
     tmp = tempfile.mkdtemp(prefix="ivf_health_")
     try:
-        idx = IVFIndex.build(
-            base,
-            f"{tmp}/idx",
-            lists=8,
-            centroids=deterministic_sample_centroids(base, 8),
-        )
+        idx = IVFIndex.build(base, f"{tmp}/idx", lists=8)
         idx.append(drift)
         out = ivf_health_report(
             idx,
@@ -4102,26 +4098,7 @@ def stream_ivf_append_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="stream_ivf_append_")
     try:
         path = os.path.join(work, "idx")
-        # r14: centers from the deterministic bounded-sample Lloyd
-        # (deterministic_sample_centroids — the path every
-        # oracle-constant IVF fixture already uses) instead of an MLlib
-        # KMeans fit: ~2.6 s of per-invocation fit cost becomes ~0.6 s,
-        # the expensive REAL build work (full assignment pass +
-        # partitioned layout write) is unchanged, and what this entry
-        # proves — streamed appends against frozen centroids equal the
-        # exact kNN under a full probe — is centroid-independent
-        # (nprobe = lists ⇒ exact, any centers).
-        from pgvector_db_spark.operators.ivf import (
-            deterministic_sample_centroids,
-        )
-
-        even = emb.filter(F.col("vec_id") % 2 == 0)
-        IVFIndex.build(
-            even,
-            path,
-            lists=4,
-            centroids=deterministic_sample_centroids(even, 4),
-        )
+        IVFIndex.build(emb.filter(F.col("vec_id") % 2 == 0), path, lists=4)
         idx = IVFIndex(spark, path, "embedding", "vec_id")
 
         applied = os.path.join(work, "applied")

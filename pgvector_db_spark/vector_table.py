@@ -25,8 +25,9 @@ Semantics preserved:
   like pgvector's insert-time list assignment).
 
 At scale each piece is the engine's existing distributed operator:
-validated append / staged copy (sources/table.py), KMeans-partitioned
-layout + pruning search (operators/ivf.py), codegen distance kernels.
+validated append / staged copy (sources/table.py), a list-partitioned
+layout whose centers come from sampled k-means + pruning search
+(operators/ivf.py), codegen distance kernels.
 """
 
 from __future__ import annotations

@@ -64,7 +64,7 @@ def test_base_stats_estimate_orders_of_magnitude(spark):
     base = docs.select(
         F.col("doc_id"), _word_ngrams("text", 3).alias("_ng")
     )
-    n_docs, est = _base_stats(base, "doc_id")
+    n_docs, est = _base_stats(base)
     assert n_docs == 20
     raw_chars = sum(
         len(" ".join(["alpha", "beta", "gamma", "delta", "epsilon", "zeta"][j:j + 3]))

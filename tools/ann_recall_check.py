@@ -2,9 +2,10 @@
 twin at each scale factor — the numbers the `_ann_probe_audit` floors
 (queries.py) must sit safely below.
 
-Run this after ANY change to an index build (KMeans params, seeds,
-partitioning) or to the execution environment (core count changes the
-file-split planning that seeds k-means|| init), and lower floors if a
+Run this after ANY change to an index build (sample size, Lloyd seed or
+iterations, the assignment kernel) or to the execution environment
+(the shared ``_ivf_cache`` fixture's centers are an MLlib fit, which
+varies with the session's partitioning), and lower floors if a
 measured recall ever comes within 1 of its floor.
 
 Usage: python tools/ann_recall_check.py
