@@ -13,7 +13,10 @@ time. The Spark-native re-expression:
             map-side argmin over a broadcast centers row (no shuffle, no
             Python boundary; ``append`` uses the same kernel)
           → write the dataset ``partitionBy("list_id")`` + a small
-            centroids parquet.
+            centroids parquet, then commit ``MANIFEST.json`` ({version,
+            metric}) with sources/commitlog.py. ``append`` commits a new
+            version too; readers read the manifest once per call and
+            reload centers and layout schema only when the version moves.
   search: rank centroids against the query driver-side (lists ≤ a few
           thousand floats — trivially small), then scan ONLY the top
           ``nprobe`` partitions (Catalyst partition pruning on
@@ -31,19 +34,40 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pgvector_db_spark.operators.knn import knn
+from pgvector_db_spark.sources.commitlog import commit_json, file_lock, read_json
+from pgvector_db_spark.utils import local_relation_df, local_rows_df
 
-from pgvector_db_spark.utils import local_rows_df
+MANIFEST = "MANIFEST.json"
 
-# Per-path caches: centroid ranking runs per query, and re-reading the tiny
-# centroids dataset (a full Spark job) or re-listing the data dataset's
-# footers per search is pure driver overhead. Invalidated by build().
-_CENTROID_CACHE: dict[str, tuple[str, list[tuple[int, list[float], float]]]] = {}
-_DATA_CACHE: dict[tuple[int, str], DataFrame] = {}
+
+class _Version(NamedTuple):
+    """What readers need of one committed index version."""
+
+    version: str
+    metric: str
+    centers: list[tuple[int, list[float], float]]  # (list_id, centroid, norm)
+    schema: StructType  # of the data layout
+
+
+# One entry per index path, replaced as soon as the manifest names another
+# version (a build, an append, or an index renamed into place), so no
+# handle, session or process ever ranks with another version's centers.
+_VERSIONS: dict[str, _Version] = {}
+
+
+def _commit_version(path: str, metric: str) -> None:
+    """Publish the layout written under ``path`` as a new version."""
+    manifest = os.path.join(path, MANIFEST)
+    with file_lock(manifest + ".lock"):
+        commit_json(manifest, {"version": uuid.uuid4().hex, "metric": metric})
 
 
 class IVFIndex:
@@ -54,7 +78,10 @@ class IVFIndex:
         self.path = path
         self.vec_col = vec_col
         self.id_col = id_col
-        self._metric: str | None = None  # lazily read from the centroids
+
+    @property
+    def manifest_path(self) -> str:
+        return os.path.join(self.path, MANIFEST)
 
     @property
     def data_path(self) -> str:
@@ -117,15 +144,10 @@ class IVFIndex:
         )
         local_rows_df(
             spark,
-            [(i, c, metric) for i, c in enumerate(centers)],
-            "list_id int, centroid array<double>, metric string",
+            list(enumerate(centers)),
+            "list_id int, centroid array<double>",
         ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-
-        from pgvector_db_spark.operators.layout import invalidate_layout
-
-        _CENTROID_CACHE.pop(os.path.join(path, "centroids"), None)
-        _DATA_CACHE.pop((id(spark), os.path.join(path, "data")), None)
-        invalidate_layout(spark, os.path.join(path, "data"))
+        _commit_version(path, metric)
         return cls(spark, path, vec_col, id_col)
 
     # -- incremental maintenance ---------------------------------------------
@@ -143,85 +165,73 @@ class IVFIndex:
         as they do in pgvector — rebuild (``build``) is the remedy there
         and here.
         """
-        centers = [c for _, c, _ in sorted(self._centroids())]
+        v = self._load()
         (
-            _assign_lists(df, centers, self.metric, self.vec_col)
+            _assign_lists(df, [c for _, c, _ in v.centers], v.metric, self.vec_col)
             .repartition("list_id")
             .write.mode("append")
             .partitionBy("list_id")
             .parquet(self.data_path)
         )
-        from pgvector_db_spark.operators.layout import invalidate_layout
-
-        _DATA_CACHE.pop((id(self.spark), self.data_path), None)
-        invalidate_layout(self.spark, self.data_path)
+        _commit_version(self.path, v.metric)
 
     # -- search --------------------------------------------------------------
 
+    def _load(self) -> _Version:
+        """The committed version: one manifest read per call, and one read
+        of the centers and the layout schema per version."""
+        m = read_json(self.manifest_path)
+        v = _VERSIONS.get(self.path)
+        if v is None or v.version != m["version"]:
+            centers = sorted(
+                (r["list_id"], list(r["centroid"]), _fold_norm(r["centroid"]))
+                for r in self.spark.read.parquet(self.centroids_path).collect()
+            )
+            schema = self.spark.read.parquet(self.data_path).schema
+            v = _Version(m["version"], m["metric"], centers, schema)
+            _VERSIONS[self.path] = v
+        return v
+
     def _centroids(self) -> list[tuple[int, list[float], float]]:
-        """(list_id, centroid, norm), cached per path — `lists` rows is
-        broadcast-tiny; reading it is pgvector scanning list metadata,
-        done once per index handle lifetime, not per query."""
-        cached = _CENTROID_CACHE.get(self.centroids_path)
-        if cached is None:
-            rows = self.spark.read.parquet(self.centroids_path).collect()
-            # metric column added with multi-metric support; absent on
-            # older layouts -> cosine (the only metric they could hold)
-            metric = (
-                rows[0]["metric"] if rows and "metric" in rows[0].__fields__
-                else "cosine"
-            )
-            cached = (
-                metric,
-                [
-                    (
-                        r["list_id"],
-                        list(r["centroid"]),
-                        _fold_norm(r["centroid"]),
-                    )
-                    for r in rows
-                ],
-            )
-            _CENTROID_CACHE[self.centroids_path] = cached
-        self._metric = cached[0]
-        return cached[1]
+        """(list_id, centroid, norm) of the committed version."""
+        return self._load().centers
 
     @property
     def metric(self) -> str:
-        if self._metric is None:
-            self._centroids()
-        return self._metric
+        return self._load().metric
 
-    def _rank_lists(self, query_vec: list[float]) -> list[tuple[int, float]]:
+    def _rank_lists(
+        self, query_vec: list[float], v: _Version | None = None
+    ) -> list[tuple[int, float]]:
         """Centroid ranking under the index's metric — the same argmin
         pgvector runs over list centers for the chosen operator class."""
-        entries = self._centroids()
+        v = v or self._load()
         ranked = []
-        if self.metric == "cosine":
+        if v.metric == "cosine":
             qn = math.sqrt(sum(x * x for x in query_vec))
-            for lid, c, cn in entries:
+            for lid, c, cn in v.centers:
                 dot = sum(x * y for x, y in zip(query_vec, c))
                 dist = 1.0 - dot / (qn * cn) if qn and cn else 1.0
                 ranked.append((lid, dist))
-        elif self.metric == "l2":
-            for lid, c, _ in entries:
+        elif v.metric == "l2":
+            for lid, c, _ in v.centers:
                 dist = math.sqrt(sum((x - y) ** 2 for x, y in zip(query_vec, c)))
                 ranked.append((lid, dist))
         else:  # ip: rank by negative inner product (pgvector <#>)
-            for lid, c, _ in entries:
+            for lid, c, _ in v.centers:
                 ranked.append((lid, -sum(x * y for x, y in zip(query_vec, c))))
         ranked.sort(key=lambda t: (t[1], t[0]))
         return ranked
 
-    def _data(self) -> DataFrame:
-        key = (id(self.spark), self.data_path)
-        df = _DATA_CACHE.get(key)
-        if df is None:
-            df = self.spark.read.parquet(self.data_path)
-            _DATA_CACHE[key] = df
-        return df
+    def _data(self, v: _Version | None = None) -> DataFrame:
+        """The whole layout, read with the version's schema (no footer
+        inference; the file listing is per call, so appends show)."""
+        v = v or self._load()
+        return self.spark.read.schema(v.schema).parquet(self.data_path)
 
-    def _probed_data(self, probes: list[int]) -> DataFrame:
+    def _probed_data(
+        self, probes: list[int], v: _Version | None = None
+    ) -> DataFrame:
         """The probed lists' rows via a DIRECT read of only their
         ``list_id=`` partition directories (r12 VERDICT item #3 — the
         fix that halved the LSH point query's fixed cost, applied to
@@ -233,8 +243,9 @@ class IVFIndex:
             read_probed_partitions,
         )
 
+        v = v or self._load()
         return read_probed_partitions(
-            self.spark, self.data_path, "list_id", probes
+            self.spark, self.data_path, "list_id", probes, schema=v.schema
         )
 
     def search(
@@ -247,20 +258,18 @@ class IVFIndex:
         fast path); unprobed data is never read, and non-probed
         partitions are not even listed.
         """
-        probes = [lid for lid, _ in self._rank_lists(query_vec)[:nprobe]]
-        data = self._probed_data(probes)
-        # layouts built before norm materialization lack _vnorm — fall
-        # back to the on-the-fly norms (same results, two extra folds);
-        # the norm fast path only applies to the cosine kernel
-        norm_col = (
-            "_vnorm"
-            if "_vnorm" in data.columns and self.metric == "cosine"
-            else None
-        )
+        v = self._load()
+        probes = [lid for lid, _ in self._rank_lists(query_vec, v)[:nprobe]]
+        return self._knn(self._probed_data(probes, v), query_vec, k, v)
+
+    def _knn(
+        self, data: DataFrame, query_vec: list[float], k: int, v: _Version
+    ) -> DataFrame:
+        """Exact top-k over layout rows; cosine reuses the stored norms."""
         return knn(
             data, query_vec, k,
-            vec_col=self.vec_col, id_col=self.id_col,
-            distance=self.metric, norm_col=norm_col,
+            vec_col=self.vec_col, id_col=self.id_col, distance=v.metric,
+            norm_col="_vnorm" if v.metric == "cosine" else None,
         ).drop("_vnorm")
 
     def search_filtered(
@@ -285,32 +294,28 @@ class IVFIndex:
         queries touch a handful of lists; iteration count is bounded by
         log2(lists). ``filter_expr`` is a Column or SQL string predicate
         over the indexed row's columns.
+
+        The result holds the rows the last round already fetched, so
+        collecting it runs no further Spark job.
         """
-        ranked = self._rank_lists(query_vec)
+        v = self._load()
+        ranked = self._rank_lists(query_vec, v)
         cap = len(ranked) if max_probes is None else min(max_probes, len(ranked))
         p = max(1, min(nprobe, cap))
         while True:
             probes = [lid for lid, _ in ranked[:p]]
-            data = self._probed_data(probes)
+            data = self._probed_data(probes, v)
             if filter_expr is not None:
                 data = data.filter(
                     F.expr(filter_expr) if isinstance(filter_expr, str)
                     else filter_expr
                 )
-            norm_col = (
-                "_vnorm"
-                if "_vnorm" in data.columns and self.metric == "cosine"
-                else None
-            )
-            out = knn(
-                data, query_vec, k,
-                vec_col=self.vec_col, id_col=self.id_col,
-                distance=self.metric, norm_col=norm_col,
-            ).drop("_vnorm")
+            out = self._knn(data, query_vec, k, v)
             # take(k) moves ≤ k tiny rows to the driver — the check that
             # decides whether pgvector would keep scanning
-            if p >= cap or len(out.take(k)) >= k:
-                return out
+            rows = out.take(k)
+            if p >= cap or len(rows) >= k:
+                return local_relation_df(self.spark, rows, out.schema)
             p = min(p * 2, cap)
 
     def batch_search(
@@ -359,7 +364,8 @@ class IVFIndex:
         Returns (query_id, vec_id, distance, knn_rank), rank 1 = nearest,
         tie-broken by ``id_col``.
         """
-        if self.metric != "cosine":
+        v = self._load()
+        if v.metric != "cosine":
             raise NotImplementedError(
                 "batch_search currently supports cosine indexes only; "
                 "use search() per query for l2/ip"
@@ -371,22 +377,24 @@ class IVFIndex:
             mode = "driver" if small else "distributed"
         if mode == "driver":
             probe_df, probed = self._probe_table_driver(
-                queries, nprobe, q_id_col, q_vec_col
+                queries, nprobe, q_id_col, q_vec_col, v
             )
             return self._score_probes(
-                probe_df, k, q_id_col, probed_lists=probed, broadcast_probes=True
+                probe_df, k, q_id_col, v, probed_lists=probed,
+                broadcast_probes=True,
             )
         if mode != "distributed":
             raise ValueError(f"unknown mode: {mode}")
         probe_df = self._probe_table_distributed(
-            queries, nprobe, q_id_col, q_vec_col
+            queries, nprobe, q_id_col, q_vec_col, v
         )
         return self._score_probes(
-            probe_df, k, q_id_col, probed_lists=None, broadcast_probes=False
+            probe_df, k, q_id_col, v, probed_lists=None, broadcast_probes=False
         )
 
     def _probe_table_driver(
-        self, queries: DataFrame, nprobe: int, q_id_col: str, q_vec_col: str
+        self, queries: DataFrame, nprobe: int, q_id_col: str, q_vec_col: str,
+        v: _Version,
     ) -> tuple[DataFrame, list[int]]:
         """Driver-side probe table: collect the batch, rank cached
         centroids per query in Python. Returns (probe_df, probed_lists)
@@ -397,7 +405,7 @@ class IVFIndex:
             (r[q_id_col], lid, qv, _fold_norm(qv))
             for r in qrows
             for qv in [[float(x) for x in r[q_vec_col]]]
-            for lid, _ in self._rank_lists(qv)[:nprobe]
+            for lid, _ in self._rank_lists(qv, v)[:nprobe]
         ]
         probe_df = local_rows_df(
             self.spark,
@@ -407,7 +415,8 @@ class IVFIndex:
         return probe_df, sorted({p[1] for p in pairs})
 
     def _probe_table_distributed(
-        self, queries: DataFrame, nprobe: int, q_id_col: str, q_vec_col: str
+        self, queries: DataFrame, nprobe: int, q_id_col: str, q_vec_col: str,
+        v: _Version | None = None,
     ) -> DataFrame:
         """Executor-side probe table: broadcast the ``lists``-row centroid
         table into a query × centroid join, score with the SAME fold order
@@ -419,9 +428,10 @@ class IVFIndex:
 
         from pgvector_db_spark.functions.vector import dot_product, l2_norm
 
+        v = v or self._load()
         cents = local_rows_df(
             self.spark,
-            [(lid, c, cn) for lid, c, cn in self._centroids()],
+            v.centers,
             "list_id int, _centroid array<double>, _cnorm double",
         )
         q = queries.select(
@@ -453,6 +463,7 @@ class IVFIndex:
         probe_df: DataFrame,
         k: int,
         q_id_col: str,
+        v: _Version,
         probed_lists: list[int] | None,
         broadcast_probes: bool,
     ) -> DataFrame:
@@ -463,26 +474,20 @@ class IVFIndex:
         from pyspark.sql.window import Window
 
         from pgvector_db_spark.functions.vector import (
-            cosine_distance,
             cosine_distance_precomputed,
         )
 
         if probed_lists is not None:
             # driver mode knows the probed union at plan time: direct
             # partition-path read, same fast path as the point query
-            data = self._probed_data(probed_lists)
+            data = self._probed_data(probed_lists, v)
         else:
-            data = self._data()
+            data = self._data(v)
         probe = F.broadcast(probe_df) if broadcast_probes else probe_df
-        joined = data.join(probe, "list_id")
-        if "_vnorm" in data.columns:
-            dist = cosine_distance_precomputed(
-                F.col(self.vec_col), F.col("_qv"),
-                F.col("_vnorm"), F.col("_qnorm"),
-            )
-        else:
-            dist = cosine_distance(F.col(self.vec_col), F.col("_qv"))
-        scored = joined.withColumn("distance", dist)
+        dist = cosine_distance_precomputed(
+            F.col(self.vec_col), F.col("_qv"), F.col("_vnorm"), F.col("_qnorm")
+        )
+        scored = data.join(probe, "list_id").withColumn("distance", dist)
         w = Window.partitionBy(q_id_col).orderBy(
             F.col("distance").asc(), F.col(self.id_col).asc()
         )
@@ -545,7 +550,8 @@ class IVFIndex:
         )
         from pgvector_db_spark.operators.knn import knn_batch
 
-        data = self._data()
+        v = self._load()
+        data = self._data(v)
         if exact is None:
             # the exact kernel scores under the INDEX metric — the
             # identity relates the probed search (metric-ranked lists,
@@ -554,25 +560,24 @@ class IVFIndex:
                 data, queries, k,
                 vec_col=self.vec_col, id_col=self.id_col,
                 q_id_col=q_id_col, q_vec_col=q_vec_col,
-                metric=self.metric,
+                metric=v.metric,
             )
 
-        cent_rows = self._centroids()
         cents = local_rows_df(
             self.spark,
-            [(lid, c) for lid, c, _ in cent_rows],
+            [(lid, c) for lid, c, _ in v.centers],
             "list_id int, _centroid array<double>",
         )
         # the centroid list is already driver-resident — a Spark job
         # for its count would be pure overhead (r13)
-        n_lists = len(cent_rows)
+        n_lists = len(v.centers)
         # centroid rank per query: the same (distance asc, list_id asc)
         # order search()'s _rank_lists applies
         dist = {
             "cosine": cosine_distance,
             "l2": l2_distance,
             "ip": inner_product_distance,
-        }[self.metric](F.col("_centroid"), F.col("_qv"))
+        }[v.metric](F.col("_centroid"), F.col("_qv"))
         w = Window.partitionBy(q_id_col).orderBy(
             F.col("_cdist").asc(), F.col("list_id").asc()
         )
@@ -906,16 +911,17 @@ def _probe_cost(idx: IVFIndex, queries: DataFrame, nprobe: int,
         l2_distance,
     )
 
+    v = idx._load()
     cents = local_rows_df(
         idx.spark,
-        [(lid, c) for lid, c, _ in idx._centroids()],
+        [(lid, c) for lid, c, _ in v.centers],
         "list_id int, _centroid array<double>",
     )
     dist = {
         "cosine": cosine_distance,
         "l2": l2_distance,
         "ip": inner_product_distance,
-    }[idx.metric](F.col("_centroid"), F.col("_qv"))
+    }[v.metric](F.col("_centroid"), F.col("_qv"))
     w = Window.partitionBy(q_id_col).orderBy(
         F.col("_cdist").asc(), F.col("list_id").asc()
     )
@@ -927,7 +933,7 @@ def _probe_cost(idx: IVFIndex, queries: DataFrame, nprobe: int,
         .filter(F.col("_crank") <= nprobe)
         .select(q_id_col, "list_id")
     )
-    sizes = idx._data().groupBy("list_id").agg(
+    sizes = idx._data(v).groupBy("list_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("_sz")
     )
     return probed.join(F.broadcast(sizes), "list_id").agg(
@@ -988,8 +994,9 @@ def ivf_health_report(
     def _ck(d: DataFrame) -> DataFrame:
         return d.localCheckpoint(eager=True)
 
-    lists = len(idx._centroids())
-    data = idx._data()
+    v = idx._load()
+    lists = len(v.centers)
+    data = idx._data(v)
     full = data.drop("list_id", "_vnorm")
     # the exact kernel MUST score under the index's own metric — an
     # l2/ip index measured against a cosine exact top-k would report
@@ -998,7 +1005,7 @@ def ivf_health_report(
     # self.metric, so only this pre-supplied kernel needs the pin
     exact = knn_batch(
         full, queries, k, vec_col=idx.vec_col, id_col=idx.id_col,
-        metric=idx.metric,
+        metric=v.metric,
     ).localCheckpoint(eager=True)
 
     n_rows = _ck(data.agg(F.count(F.lit(1)).cast("bigint").alias("n_rows")))

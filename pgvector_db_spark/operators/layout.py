@@ -62,12 +62,14 @@ def read_probed_partitions(
     path: str,
     part_col: str,
     values: list[int],
+    schema=None,
 ) -> DataFrame:
     """Read ONLY the probed ``<part_col>=<v>`` partition directories,
     keeping the partition column via ``basePath`` — row-identical to
     ``read(path).filter(part_col.isin(values))`` but skips discovering
-    and pruning the non-probed partitions, and (after the first call
-    per session) skips schema inference via the cached layout schema.
+    and pruning the non-probed partitions, and skips schema inference:
+    ``schema`` is the caller's layout schema, else (after the first call
+    per session) the cached one.
     Falls back to the filtered full-listing read when the path isn't a
     local directory (object-store URIs: existence probes cost a request
     each, and the catalog listing is the portable path) or when every
@@ -80,14 +82,16 @@ def read_probed_partitions(
             if os.path.isdir(os.path.join(path, f"{part_col}={v}"))
         ]
         if dirs:
-            key = (id(spark), path)
-            schema = _SCHEMA_CACHE.get(key)
             reader = spark.read.option("basePath", path)
             if schema is None:
-                df = reader.parquet(*dirs)
-                _SCHEMA_CACHE[key] = df.schema
-                return df
+                key = (id(spark), path)
+                schema = _SCHEMA_CACHE.get(key)
+                if schema is None:
+                    df = reader.parquet(*dirs)
+                    _SCHEMA_CACHE[key] = df.schema
+                    return df
             return reader.schema(schema).parquet(*dirs)
-    return spark.read.parquet(path).filter(
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path).filter(
         F.col(part_col).isin(list(values))
     )

@@ -287,12 +287,13 @@ def search_ivfpq_layout(
 
     idx = IVFIndex(spark, path, vec_col, id_col)
     model = load_pq_model(path)
-    probes = [lid for lid, _ in idx._rank_lists(query_vec)[:nprobe]]
+    v = idx._load()
+    probes = [lid for lid, _ in idx._rank_lists(query_vec, v)[:nprobe]]
     # direct partition-path read of only the probed list_id dirs (r13 —
     # the same fix that took the LSH and IVF point queries off their
     # full-layout-listing fixed cost; row/schema-identical to
     # _data().filter(isin))
-    data = idx._probed_data(probes)
+    data = idx._probed_data(probes, v)
     cand = pq_search(
         data.select(id_col, "codes"), model, query_vec, shortlist, id_col=id_col
     )

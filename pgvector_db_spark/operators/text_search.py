@@ -55,11 +55,10 @@ O(corpus tokens).
 
 from __future__ import annotations
 
-import contextlib as _contextlib
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pgvector_db_spark.sources.commitlog import commit_json, file_lock, read_json
 from pgvector_db_spark.utils import local_rows_df
 
 TOKEN_PATTERN = r"\s+"
@@ -1217,7 +1216,7 @@ def ql_dirichlet_oracle_sql(
 
 # per-(path, segment-set) cache of summed (n_docs, sum_dl): the segment
 # stats read is a Spark job, pure per-query driver overhead if repeated
-# (same pattern as operators/ivf._CENTROID_CACHE).
+# (the IVF index keeps its centers per version the same way).
 _STATS_CACHE: dict[tuple, tuple[int, int]] = {}
 # assembled (postings, terms) source frames per (path, segment set): a
 # segment is immutable once committed and any layout change (append,
@@ -1304,76 +1303,13 @@ class BM25Index:
         return _os.path.join(self.path, "MANIFEST.json")
 
     def _read_manifest(self) -> dict:
-        import json as _json
+        return read_json(self._manifest_path())
 
-        with open(self._manifest_path()) as f:
-            return _json.load(f)
-
-    def _commit_manifest(self, manifest: dict) -> None:
-        """Atomic rename commit — readers see the old or the new segment
-        set, never a torn state."""
-        import json as _json
-        import os as _os
-
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(manifest, f)
-        _os.replace(tmp, self._manifest_path())
-
-    @_contextlib.contextmanager
-    def _manifest_lock(
-        self, timeout: float = 60.0, stale_after: float = 300.0
-    ):
-        """Serialize the manifest read-modify-write commit window across
-        concurrent writers. Without this, two appends could both re-read
-        the same manifest and the last committer would silently drop the
-        other's segment entry (r3 ADVICE). ``O_CREAT|O_EXCL`` is atomic
-        on POSIX filesystems (incl. NFSv4/HDFS-fuse); a lock older than
-        ``stale_after`` is treated as a crashed writer and reclaimed. On
-        object stores without atomic create, run writers under the
-        streaming engine's sequential ``foreachBatch`` contract (the
-        supported single-writer mode) — the lock then simply never
-        contends."""
-        import os as _os
-        import time as _time
-
-        import uuid as _uuid
-
-        lock = self._manifest_path() + ".lock"
-        deadline = _time.monotonic() + timeout
-        while True:
-            try:
-                fd = _os.open(lock, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY)
-                break
-            except FileExistsError:
-                try:
-                    if _time.time() - _os.path.getmtime(lock) > stale_after:
-                        # crashed writer — reclaim ATOMICALLY via rename:
-                        # exactly one waiter wins the rename (a plain
-                        # unlink would let a second waiter delete the
-                        # winner's freshly created lock and re-open the
-                        # double-writer window this lock exists to close)
-                        stale = f"{lock}.stale.{_uuid.uuid4().hex[:8]}"
-                        try:
-                            _os.rename(lock, stale)
-                            _os.unlink(stale)
-                        except FileNotFoundError:
-                            pass  # another waiter won the reclaim
-                        continue
-                except FileNotFoundError:
-                    continue  # holder released between check and stat
-                if _time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"BM25 manifest lock busy for >{timeout}s: {lock}"
-                    )
-                _time.sleep(0.05)
-        try:
-            _os.write(fd, str(_os.getpid()).encode())
-            _os.close(fd)
-            yield
-        finally:
-            with _contextlib.suppress(FileNotFoundError):
-                _os.unlink(lock)
+    def _lock_path(self) -> str:
+        # serializes each manifest read-modify-write: without it two
+        # appends could re-read one manifest and the last committer
+        # would silently drop the other's segment entry
+        return self._manifest_path() + ".lock"
 
     # -- segment writer (shared by build and append) -------------------------
 
@@ -1458,7 +1394,8 @@ class BM25Index:
             docs, _os.path.join(path, seg), num_buckets, id_col, text_col
         )
         idx = cls(docs.sparkSession, path, id_col)
-        idx._commit_manifest(
+        commit_json(
+            idx._manifest_path(),
             {"num_buckets": num_buckets, "segments": [seg], "batch_tags": []}
         )
         return idx
@@ -1492,7 +1429,7 @@ class BM25Index:
         # commit under the manifest lock: the segment write above is
         # side-effect-free until its entry lands, so only this re-read →
         # commit window needs serializing against concurrent writers
-        with self._manifest_lock():
+        with file_lock(self._lock_path()):
             m2 = self._read_manifest()
             if batch_tag is not None and batch_tag in m2["batch_tags"]:
                 # a racing replay committed this batch first — our
@@ -1504,7 +1441,7 @@ class BM25Index:
             m2["segments"].append(seg)
             if batch_tag is not None:
                 m2["batch_tags"].append(batch_tag)
-            self._commit_manifest(m2)
+            commit_json(self._manifest_path(), m2)
 
     # -- search --------------------------------------------------------------
 
@@ -1739,7 +1676,7 @@ class BM25Index:
         ).coalesce(1).write.mode("overwrite").parquet(
             _os.path.join(seg_path, "stats")
         )
-        with self._manifest_lock():
+        with file_lock(self._lock_path()):
             m2 = self._read_manifest()
             if m2["segments"] != m["segments"]:
                 # a concurrent append landed between our snapshot and now —
@@ -1749,7 +1686,7 @@ class BM25Index:
                 _shutil.rmtree(seg_path, ignore_errors=True)
                 return
             m2["segments"] = [seg]
-            self._commit_manifest(m2)
+            commit_json(self._manifest_path(), m2)
         # the replaced segments are unreachable from the committed
         # manifest — delete them, or a continuously compacting ingest
         # grows disk O(total-ever-ingested) instead of O(index). Readers

@@ -158,6 +158,12 @@ def _atomic_cached_build(path: str, ready: str, build) -> str:
     return path
 
 
+# Layout tag in the IVF fixture dir names: a layout an older build left
+# in $TMPDIR (no MANIFEST.json, the ready marker) has another name and is
+# rebuilt, never read.
+_IVF_LAYOUT = "mf1"
+
+
 def _ivf_cache(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
     """The shared seeded lists=8 IVF layout for ``sf_dir`` (atomic).
 
@@ -169,7 +175,7 @@ def _ivf_cache(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    from pgvector_db_spark.operators.ivf import IVFIndex
+    from pgvector_db_spark.operators.ivf import MANIFEST, IVFIndex
 
     def build(p: str) -> None:
         featured = emb.withColumn(
@@ -184,9 +190,9 @@ def _ivf_cache(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
         IVFIndex.build(emb, p, lists=len(centers), centroids=centers)
 
     path = os.path.join(
-        tempfile.gettempdir(), f"ivf_cache_{_fixture_tag(sf_dir)}"
+        tempfile.gettempdir(), f"ivf_{_IVF_LAYOUT}_cache_{_fixture_tag(sf_dir)}"
     )
-    return _atomic_cached_build(path, "centroids", build)
+    return _atomic_cached_build(path, MANIFEST, build)
 
 
 def _ivf_metric_cache(
@@ -201,15 +207,15 @@ def _ivf_metric_cache(
     session with different parallelism (r10 ADVICE)."""
     import tempfile
 
-    from pgvector_db_spark.operators.ivf import IVFIndex
+    from pgvector_db_spark.operators.ivf import MANIFEST, IVFIndex
 
     path = os.path.join(
         tempfile.gettempdir(),
-        f"ivf_{metric}_detcache_{_fixture_tag(sf_dir)}",
+        f"ivf_{metric}_{_IVF_LAYOUT}_detcache_{_fixture_tag(sf_dir)}",
     )
     return _atomic_cached_build(
         path,
-        "centroids",
+        MANIFEST,
         lambda p: IVFIndex.build(emb, p, lists=8, metric=metric),
     )
 
@@ -3578,14 +3584,15 @@ def vs_ivf_knn_l2_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from pgvector_db_spark.operators.ivf import IVFIndex
+    from pgvector_db_spark.operators.ivf import MANIFEST, IVFIndex
 
     t = load_tables(spark, sf_dir)
     path = _atomic_cached_build(
         os.path.join(
-            tempfile.gettempdir(), f"ivf_l2_cache_{_fixture_tag(sf_dir)}"
+            tempfile.gettempdir(),
+            f"ivf_l2_{_IVF_LAYOUT}_cache_{_fixture_tag(sf_dir)}",
         ),
-        "centroids",
+        MANIFEST,
         lambda p: IVFIndex.build(t["embeddings"], p, lists=8, metric="l2"),
     )
     idx = IVFIndex(spark, path, "embedding", "vec_id")
@@ -9126,7 +9133,8 @@ def _ivfpq_path(spark: SparkSession, sf_dir: str) -> str:
     t = load_tables(spark, sf_dir)
     return _atomic_cached_build(
         os.path.join(
-            tempfile.gettempdir(), f"ivfpq_cache_{_fixture_tag(sf_dir)}"
+            tempfile.gettempdir(),
+            f"ivfpq_{_IVF_LAYOUT}_cache_{_fixture_tag(sf_dir)}",
         ),
         "model.json",
         lambda p: build_ivfpq_layout(t["embeddings"], p, lists=8, m=16, k=32),

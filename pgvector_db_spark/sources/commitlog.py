@@ -1,11 +1,14 @@
-"""Shared commit-log primitives: an atomic JSON manifest commit and an
-O_CREAT|O_EXCL lock serializing read-modify-write commit windows.
+"""The one commit protocol of every manifest in the engine: an atomic
+JSON commit (temp file + rename) and an O_CREAT|O_EXCL lock serializing
+read-modify-write commit windows.
 
-Same protocol the BM25 index manifest uses (operators/text_search.py);
-factored here for the snapshot table. POSIX-atomic (incl. NFSv4 /
-HDFS-fuse); on object stores without atomic create, run writers under a
-sequential single-writer contract (e.g. the streaming engine's
-foreachBatch) — the lock then never contends.
+Users: the snapshot log (sources/snapshots.py), the BM25 and sparse
+indexes' manifests (operators/text_search.py, operators/sparse_index.py),
+the IVF index's ``MANIFEST.json`` (operators/ivf.py) and VectorTable's
+``tombstones.json``. POSIX-atomic (incl. NFSv4 / HDFS-fuse); on object
+stores without atomic create, run writers under a sequential
+single-writer contract (e.g. the streaming engine's foreachBatch) — the
+lock then never contends.
 """
 
 from __future__ import annotations
@@ -18,7 +21,7 @@ import uuid
 from collections.abc import Iterator
 
 
-def commit_json(path: str, payload: dict) -> None:
+def commit_json(path: str, payload) -> None:
     """Write ``payload`` to ``path`` via temp-file + atomic rename:
     readers see the old or the new content, never a torn state."""
     tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
@@ -27,7 +30,7 @@ def commit_json(path: str, payload: dict) -> None:
     os.replace(tmp, path)
 
 
-def read_json(path: str) -> dict:
+def read_json(path: str):
     with open(path) as f:
         return json.load(f)
 

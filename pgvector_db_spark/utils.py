@@ -19,7 +19,8 @@ import time
 from collections.abc import Callable
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 logger = logging.getLogger(__name__)
 
@@ -96,6 +97,38 @@ def local_rows_df(spark: SparkSession, rows, schema, slice_rows: int = 100_000):
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, n_slices), schema
     )
+
+
+def local_relation_df(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """Rows already on the driver as a ``LocalRelation`` frame: collecting
+    it, or a projection of it, starts no Spark job, where
+    ``createDataFrame(rows, schema)`` parallelizes the rows and its
+    collect runs one. The rows go through Arrow with pyspark's own
+    local-data converter; nullability is relaxed because that converter
+    rejects non-nullable nested fields."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = _nullable(schema)
+    table = (
+        LocalDataToArrowConversion.convert(rows, schema, False)
+        if rows
+        else to_arrow_schema(schema).empty_table()
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _nullable(t):
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata)
+             for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 def download_model(

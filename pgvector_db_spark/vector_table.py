@@ -24,6 +24,12 @@ Semantics preserved:
 - INSERT after CREATE INDEX keeps the index fresh (frozen centroids,
   like pgvector's insert-time list assignment).
 
+On disk: ``rows/`` (parquet, swapped in atomically by delete and
+upsert), ``index/`` (the IVF layout; its ``MANIFEST.json`` marks it
+committed) and ``tombstones.json`` (ids deleted since the last vacuum).
+Both JSON files are committed with sources/commitlog.py and read on
+every call, so every handle and process sees every write.
+
 At scale each piece is the engine's existing distributed operator:
 validated append / staged copy (sources/table.py), a list-partitioned
 layout whose centers come from sampled k-means + pruning search
@@ -32,7 +38,7 @@ layout whose centers come from sampled k-means + pruning search
 
 from __future__ import annotations
 
-import json
+import contextlib
 import os
 import shutil
 
@@ -42,6 +48,7 @@ from pyspark.sql.window import Window
 
 from pgvector_db_spark.operators.ivf import IVFIndex
 from pgvector_db_spark.operators.knn import knn
+from pgvector_db_spark.sources.commitlog import commit_json, file_lock, read_json
 from pgvector_db_spark.sources.table import ParquetTable
 
 
@@ -61,7 +68,6 @@ class VectorTable:
         self.vec_col = vec_col
         self.id_col = id_col
         self.metric = metric
-        self._tombstone_cache: list[int] | None = None
         self._table = ParquetTable(
             spark,
             os.path.join(path, "rows"),
@@ -81,8 +87,11 @@ class VectorTable:
     def index_path(self) -> str:
         return os.path.join(self.path, "index")
 
+    def _index(self) -> IVFIndex:
+        return IVFIndex(self.spark, self.index_path, self.vec_col, self.id_col)
+
     def has_index(self) -> bool:
-        return os.path.exists(os.path.join(self.index_path, "centroids"))
+        return os.path.exists(self._index().manifest_path)
 
     def to_df(self) -> DataFrame:
         return self._table.read()
@@ -121,7 +130,7 @@ class VectorTable:
         df = self._with_ids(df)
         self._table.insert(df, batch_rows=batch_rows)
         if self.has_index():
-            IVFIndex(self.spark, self.index_path, self.vec_col, self.id_col).append(df)
+            self._index().append(df)
             self._unmask_written_ids(df)
 
     def copy_from(self, data: DataFrame | str) -> int:
@@ -135,7 +144,7 @@ class VectorTable:
             )
         n = self._table.copy_from(df)
         if self.has_index():
-            IVFIndex(self.spark, self.index_path, self.vec_col, self.id_col).append(df)
+            self._index().append(df)
             self._unmask_written_ids(df)
         return n
 
@@ -153,6 +162,9 @@ class VectorTable:
         )
 
     def drop_index(self) -> None:
+        # the manifest goes first: a half-removed directory is no index
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(self._index().manifest_path)
         shutil.rmtree(self.index_path, ignore_errors=True)
 
     # -- deletes (DELETE FROM t WHERE id IN (...)) ---------------------------
@@ -162,25 +174,19 @@ class VectorTable:
         return os.path.join(self.path, "tombstones.json")
 
     def _tombstones(self) -> list[int]:
-        # cached driver-side: the set only changes through delete()/
-        # vacuum()/write paths on THIS facade (single-writer, like the
-        # rest of the object), and a serving loop must not pay a read
-        # per search
-        if self._tombstone_cache is None:
-            if os.path.exists(self._tombstone_path):
-                with open(self._tombstone_path) as f:
-                    self._tombstone_cache = json.load(f)
-            else:
-                self._tombstone_cache = []
-        return list(self._tombstone_cache)
+        """Ids deleted since the last vacuum. Read on every call, so a
+        delete through any handle or process masks the next search."""
+        try:
+            return read_json(self._tombstone_path)
+        except FileNotFoundError:
+            return []
 
-    def _write_tombstones(self, ids: list[int]) -> None:
-        ids = sorted(set(int(i) for i in ids))
-        tmp = self._tombstone_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(ids, f)
-        os.replace(tmp, self._tombstone_path)
-        self._tombstone_cache = ids
+    def _commit_tombstones(self, change) -> None:
+        """Replace the tombstone set with ``change(current set)``, as one
+        read-modify-write under the commit lock."""
+        with file_lock(self._tombstone_path + ".lock"):
+            ids = change(set(self._tombstones()))
+            commit_json(self._tombstone_path, sorted(ids))
 
     def _unmask_written_ids(self, df: DataFrame) -> None:
         """A write that carries a tombstoned id revives it — drop those
@@ -198,19 +204,7 @@ class VectorTable:
             .collect()
         ]
         if revived:
-            self._clear_tombstones(revived)
-
-    def _clear_tombstones(self, ids: list[int] | None = None) -> None:
-        """Drop all tombstones, or just the given ids (a write that
-        reuses a tombstoned id must un-mask it, or the new live row
-        would be invisible to indexed search)."""
-        if ids is None:
-            if os.path.exists(self._tombstone_path):
-                os.remove(self._tombstone_path)
-            self._tombstone_cache = []
-            return
-        left = sorted(set(self._tombstones()) - set(int(i) for i in ids))
-        self._write_tombstones(left)
+            self._commit_tombstones(lambda d: d - set(revived))
 
     def delete(self, ids: list[int]) -> int:
         """DELETE analogue: the base table is rewritten immediately
@@ -224,15 +218,16 @@ class VectorTable:
         ids = [int(i) for i in ids]
         if not ids:
             return self.count()
+        # tombstones before the row swap: a failure in between leaves
+        # live rows masked, never deleted rows served by the index.
+        # Unconditional: _with_ids uses the set as the SERIAL never-reuse
+        # high-water mark, so an unindexed delete of the max id must
+        # still be recorded or the id gets recycled
+        self._commit_tombstones(lambda d: d | set(ids))
         keys = self.spark.createDataFrame(
             [(i,) for i in ids], [self.id_col]
         )
-        n = self._table.delete(keys, self.id_col)
-        # unconditional: _assign_ids uses the tombstone list as the
-        # SERIAL never-reuse high-water mark, so an unindexed delete of
-        # the max id must still be recorded or the id gets recycled
-        self._write_tombstones(self._tombstones() + ids)
-        return n
+        return self._table.delete(keys, self.id_col)
 
     def upsert(self, df: DataFrame) -> int:
         """UPDATE/ON CONFLICT analogue: incoming rows replace same-id
@@ -248,37 +243,34 @@ class VectorTable:
                 f"upsert requires the {self.id_col!r} column"
             )
         # no explicit validate: ParquetTable.upsert validates the frame
+        if not self.has_index():
+            return self._table.upsert(df, key=self.id_col)
+        # the index goes before the swap: a failure in between leaves no
+        # index (exact search), never one serving the replaced rows
+        v = self._index()._load()
+        self.drop_index()
         n = self._table.upsert(df, key=self.id_col)
-        if self.has_index():
-            self.vacuum()
+        self._reindex(v)
         return n
 
     def vacuum(self) -> None:
         """VACUUM analogue: rebuild the index from live rows only and
         clear the tombstone set. Shrinks ``lists`` to the live row
         count when deletes left fewer rows than centroids; an emptied
-        table just drops its index (nothing to cluster). No-op without
-        an index."""
-        if not self.has_index():
-            self._clear_tombstones()
-            return
-        live = self.count()
-        if live == 0:
-            self.drop_index()
-            self._clear_tombstones()
-            return
-        lists = min(
-            live,
-            self.spark.read.parquet(
-                os.path.join(self.index_path, "centroids")
-            ).count(),
-        )
-        metric = IVFIndex(
-            self.spark, self.index_path, self.vec_col, self.id_col
-        ).metric
+        table just drops its index (nothing to cluster). Without an
+        index it only clears the tombstones."""
+        v = self._index()._load() if self.has_index() else None
         self.drop_index()
-        self.create_index(lists=lists, metric=metric)
-        self._clear_tombstones()
+        self._reindex(v)
+
+    def _reindex(self, v) -> None:
+        """Build the index like version ``v`` of the dropped one (same
+        metric, at most as many lists) over the live rows, then clear
+        the tombstones. With ``v`` None, only clear them."""
+        live = self.count() if v else 0
+        if live:
+            self.create_index(lists=min(live, len(v.centers)), metric=v.metric)
+        self._commit_tombstones(lambda d: set())
 
     # -- reads ---------------------------------------------------------------
 
@@ -293,7 +285,7 @@ class VectorTable:
                 self.to_df(), query_vec, k,
                 vec_col=self.vec_col, id_col=self.id_col, distance=self.metric,
             )
-        idx = IVFIndex(self.spark, self.index_path, self.vec_col, self.id_col)
+        idx = self._index()
         dead = self._tombstones()
         if dead:
             # mask dead index entries; the iterative scan widens probes

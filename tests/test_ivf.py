@@ -329,7 +329,7 @@ def test_batch_search_distributed_plan_has_no_static_prune(index, tables):
 
 
 def test_probed_read_schema_cache_sees_appends(spark, tables, tmp_path):
-    """The layout schema cache (operators/layout.py) must cache ONLY the
+    """The layout schema cached per index version must cache ONLY the
     schema, never the file listing: rows appended after the first probed
     read (which primes the cache) must appear in the next search, and
     results must stay identical to the declarative filtered read."""
@@ -341,7 +341,7 @@ def test_probed_read_schema_cache_sees_appends(spark, tables, tmp_path):
     rest = emb.filter("vec_id % 2 = 1")
     idx = IVFIndex.build(half, str(tmp_path / "sc"), lists=4)
     q = list(emb.filter("vec_id = 0").first()["embedding"])
-    # primes the (session, path) schema cache
+    # primes the schema cached for the index version
     before = idx.search(q, k=50, nprobe=4).collect()
     idx.append(rest)
     after = idx.search(q, k=50, nprobe=4)
@@ -356,3 +356,59 @@ def test_probed_read_schema_cache_sees_appends(spark, tables, tmp_path):
     )
     direct = idx._probed_data(probes).count()
     assert direct == declarative
+
+
+def test_search_filtered_result_collects_without_a_spark_job(
+    index, tables, spark
+):
+    """search_filtered returns the rows its last round already fetched:
+    collecting them runs no second Spark job."""
+    emb = tables["embeddings"]
+    q = list(emb.filter("vec_id = 0").first()["embedding"])
+    out = index.search_filtered(q, k=10, filter_expr="label = 6", nprobe=1)
+    sc = spark.sparkContext
+    sc.setJobGroup("search_filtered_collect", "collect only")
+    try:
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("search_filtered_collect") == []
+    assert len(rows) == 10 and all(r["label"] == 6 for r in rows)
+    assert out.columns == index.search(q, k=10, nprobe=1).columns
+
+
+def test_index_renamed_into_place_is_served_with_its_own_metric_and_lists(
+    spark, tmp_path
+):
+    """An index rebuilt elsewhere and renamed over the path of an index
+    that a handle has already searched (what a second process, or
+    queries._atomic_cached_build, does) is served with ITS metric, list
+    count and layout — the handle's cache follows the manifest version."""
+    import math
+    import os
+    import shutil
+
+    rows = [
+        (i, [(1 + i % 5) * math.cos(i * 0.4), (1 + i % 5) * math.sin(i * 0.4), 0.5])
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = [2.0, 0.3, 0.5]
+    path = str(tmp_path / "idx")
+    IVFIndex.build(df, path, lists=4, metric="cosine")
+    handle = IVFIndex(spark, path, "embedding", "vec_id")
+    handle.search(q, k=5, nprobe=4).collect()
+    assert handle.metric == "cosine" and len(handle._centroids()) == 4
+
+    IVFIndex.build(df, str(tmp_path / "other"), lists=2, metric="l2")
+    shutil.rmtree(path)
+    os.rename(str(tmp_path / "other"), path)
+
+    assert handle.metric == "l2" and len(handle._centroids()) == 2
+
+    def ranked(frame):
+        return [(r["vec_id"], r["distance"]) for r in frame.collect()]
+
+    want = ranked(knn(df, q, 5, distance="l2"))
+    assert want != ranked(knn(df, q, 5, distance="cosine"))
+    assert ranked(handle.search(q, k=5, nprobe=2)) == want

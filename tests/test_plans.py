@@ -406,33 +406,6 @@ def test_bm25_concurrent_appends_both_commit(spark, tables, tmp_path):
     assert got == want
 
 
-def test_bm25_manifest_lock_excludes_and_reclaims_stale(spark, tables, tmp_path):
-    """The lock is mutually exclusive (second acquirer times out) and a
-    stale lock file from a crashed writer is reclaimed."""
-    import os
-    import time
-
-    import pytest as _pytest
-
-    from pgvector_db_spark.operators.text_search import BM25Index
-
-    docs = tables["documents"].limit(50)
-    idx = BM25Index.build(docs, str(tmp_path / "lk"), num_buckets=4)
-    with idx._manifest_lock():
-        with _pytest.raises(TimeoutError):
-            with idx._manifest_lock(timeout=0.3):
-                pass
-    # crashed-writer simulation: a lock file nobody will release
-    lock = idx._manifest_path() + ".lock"
-    with open(lock, "w") as f:
-        f.write("dead")
-    old = time.time() - 1000
-    os.utime(lock, (old, old))
-    with idx._manifest_lock(timeout=1.0, stale_after=300.0):
-        pass  # reclaimed without waiting out the timeout
-    assert not os.path.exists(lock)
-
-
 def test_bm25_compact_preserves_scores(spark, tables, tmp_path):
     """Compaction merges all segments into one without changing a single
     score (docs disjoint ⇒ postings union unchanged, df/stats additive)."""

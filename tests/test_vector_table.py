@@ -233,3 +233,126 @@ def test_delete_edge_cases_and_id_recycling_guard(spark, vt):
     assert vt.count() == 0
     vt.vacuum()
     assert not vt.has_index() and vt._tombstones() == []
+
+
+def _indexed_table(spark, vt, n=40):
+    """``vt`` with ``n`` rows and a 4-list index; returns the query and
+    the ids of its 3 nearest rows."""
+    import math
+
+    rows = [
+        (f"d{i}", [math.cos(i * 0.3), math.sin(i * 0.3), 0.1 * (i % 4)])
+        for i in range(n)
+    ]
+    vt.insert(_docs(spark, rows))
+    vt.create_index(lists=4)
+    q = rows[0][1]
+    return q, [r["id"] for r in vt.search(q, k=3, probes=4).collect()]
+
+
+def _assert_index_serves_only_table_rows(vt, q):
+    table = {(r["id"], r["text"]) for r in vt.to_df().collect()}
+    served = {(r["id"], r["text"]) for r in vt.search(q, k=10, probes=4).collect()}
+    assert served and served <= table
+
+
+def _boom(*args, **kwargs):
+    raise RuntimeError("injected failure")
+
+
+def test_delete_through_one_handle_masks_another_handles_index(spark, vt):
+    """Two handles on one table: after handle A deletes a row, handle
+    B's indexed search stops returning it, like its exact search."""
+    q, near = _indexed_table(spark, vt)
+    other = VectorTable(spark, vt.path, dim=3)
+    assert near[0] in [r["id"] for r in other.search(q, k=3, probes=4).collect()]
+    vt.delete([near[0]])
+    assert near[0] not in [r["id"] for r in other.search(q, k=3).collect()]
+    assert near[0] not in [
+        r["id"] for r in other.search(q, k=3, probes=4).collect()
+    ]
+
+
+@pytest.mark.parametrize("fail_at", ["tombstones", "swap"])
+def test_delete_failure_never_leaves_index_serving_deleted_rows(
+    spark, vt, monkeypatch, fail_at
+):
+    """A delete that fails between committing its tombstones and swapping
+    the rows leaves every (id, text) that indexed search returns in the
+    table."""
+    import os
+
+    from pgvector_db_spark.sources.table import ParquetTable
+
+    q, near = _indexed_table(spark, vt)
+    if fail_at == "tombstones":
+        # the atomic rename that commits tombstones.json
+        monkeypatch.setattr(os, "replace", _boom)
+    else:
+        monkeypatch.setattr(ParquetTable, "_swap_in", _boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        vt.delete(near)
+    monkeypatch.undo()
+    _assert_index_serves_only_table_rows(vt, q)
+
+
+@pytest.mark.parametrize("fail_at", ["drop_index", "swap", "rebuild"])
+def test_upsert_failure_never_leaves_index_serving_replaced_rows(
+    spark, vt, monkeypatch, fail_at
+):
+    """An upsert drops the index before its row swap and rebuilds it
+    after: a failure at any step leaves every (id, text) that indexed
+    search returns in the table."""
+    from pgvector_db_spark.sources.table import ParquetTable
+
+    q, near = _indexed_table(spark, vt)
+    vecs = {r["id"]: list(r["embedding"]) for r in vt.to_df().collect()}
+    upd = spark.createDataFrame(
+        [(i, f"new{i}", vecs[i]) for i in near],
+        "id long, text string, embedding array<float>",
+    )
+    target = {
+        "drop_index": (VectorTable, "drop_index"),
+        "swap": (ParquetTable, "_swap_in"),
+        "rebuild": (VectorTable, "create_index"),
+    }[fail_at]
+    monkeypatch.setattr(*target, _boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        vt.upsert(upd)
+    monkeypatch.undo()
+    _assert_index_serves_only_table_rows(vt, q)
+
+
+def test_has_index_checks_the_manifest(spark, vt):
+    """An index directory without its MANIFEST.json is no index: search
+    takes the exact path."""
+    import os
+
+    q, near = _indexed_table(spark, vt)
+    os.remove(os.path.join(vt.index_path, "MANIFEST.json"))
+    assert not vt.has_index()
+    assert [r["id"] for r in vt.search(q, k=3, probes=4).collect()] == near
+
+
+def test_concurrent_tombstone_commits_lose_no_id(vt):
+    """Tombstone commits are read-modify-writes under the commit lock:
+    16 threads each adding one id, with a shortened switch interval,
+    lose none of them."""
+    import sys
+    import threading
+
+    def add(i):
+        vt._commit_tombstones(lambda dead: dead | {i})
+
+    threads = [threading.Thread(target=add, args=(i,)) for i in range(16)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert vt._tombstones() == list(range(16))
