@@ -20,52 +20,39 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from pgvector_db_spark.functions.vector import dot_sql
-
-_DOT = dot_sql("a", "b", "spark")
-_NORM_A = f"sqrt({dot_sql('a', 'a', 'spark')})"
-_NORM_B = f"sqrt({dot_sql('b', 'b', 'spark')})"
+from pgvector_db_spark.functions import vector as V
 
 _FUNCTIONS: dict[str, str] = {
     "dot_product": f"""
         CREATE OR REPLACE TEMPORARY FUNCTION dot_product(a ARRAY<FLOAT>, b ARRAY<FLOAT>)
-        RETURNS DOUBLE RETURN {_DOT}""",
+        RETURNS DOUBLE RETURN {V.dot_sql('a', 'b')}""",
     "vector_norm": f"""
         CREATE OR REPLACE TEMPORARY FUNCTION vector_norm(a ARRAY<FLOAT>)
-        RETURNS DOUBLE RETURN sqrt({dot_sql('a', 'a', 'spark')})""",
+        RETURNS DOUBLE RETURN {V.norm_sql('a')}""",
     "cosine_similarity": f"""
         CREATE OR REPLACE TEMPORARY FUNCTION cosine_similarity(a ARRAY<FLOAT>, b ARRAY<FLOAT>)
-        RETURNS DOUBLE RETURN {_DOT} / ({_NORM_A} * {_NORM_B})""",
+        RETURNS DOUBLE RETURN {V.cosine_similarity_sql('a', 'b')}""",
     "cosine_distance": f"""
         CREATE OR REPLACE TEMPORARY FUNCTION cosine_distance(a ARRAY<FLOAT>, b ARRAY<FLOAT>)
-        RETURNS DOUBLE RETURN 1.0 - ({_DOT} / ({_NORM_A} * {_NORM_B}))""",
+        RETURNS DOUBLE RETURN {V.cosine_distance_sql('a', 'b')}""",
     "inner_product_distance": f"""
         CREATE OR REPLACE TEMPORARY FUNCTION inner_product_distance(a ARRAY<FLOAT>, b ARRAY<FLOAT>)
-        RETURNS DOUBLE RETURN -({_DOT})""",
-    "l2_distance": """
+        RETURNS DOUBLE RETURN {V.ip_sql('a', 'b')}""",
+    "l2_distance": f"""
         CREATE OR REPLACE TEMPORARY FUNCTION l2_distance(a ARRAY<FLOAT>, b ARRAY<FLOAT>)
-        RETURNS DOUBLE RETURN sqrt(aggregate(zip_with(a, b,
-          (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),
-          CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))""",
-    "l1_distance": """
+        RETURNS DOUBLE RETURN {V.l2_sql('a', 'b')}""",
+    "l1_distance": f"""
         CREATE OR REPLACE TEMPORARY FUNCTION l1_distance(a ARRAY<FLOAT>, b ARRAY<FLOAT>)
-        RETURNS DOUBLE RETURN aggregate(zip_with(a, b,
-          (x, y) -> abs(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),
-          CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)""",
+        RETURNS DOUBLE RETURN {V.l1_sql('a', 'b')}""",
     "to_vector": """
         CREATE OR REPLACE TEMPORARY FUNCTION to_vector(s STRING)
         RETURNS ARRAY<FLOAT> RETURN from_json(s, 'array<float>')""",
     "vector_dims": """
         CREATE OR REPLACE TEMPORARY FUNCTION vector_dims(a ARRAY<FLOAT>)
         RETURNS INT RETURN size(a)""",
-    # norm hoisted out of the lambda via array_repeat (evaluated once per
-    # row) — transform(a, x -> x / norm) would re-run the O(d) fold per
-    # element; see functions/vector.py:l2_normalize
     "l2_normalize": f"""
         CREATE OR REPLACE TEMPORARY FUNCTION l2_normalize(a ARRAY<FLOAT>)
-        RETURNS ARRAY<DOUBLE> RETURN zip_with(a,
-          array_repeat(sqrt({dot_sql('a', 'a', 'spark')}), size(a)),
-          (x, n) -> CAST(x AS DOUBLE) / n)""",
+        RETURNS ARRAY<DOUBLE> RETURN {V.l2_normalize_sql('a')}""",
 }
 
 # sparsevec surface (functions/sparse.py), same SQL-UDF treatment; the
@@ -94,7 +81,7 @@ _FUNCTIONS.update(
         CREATE OR REPLACE TEMPORARY FUNCTION sparse_cosine_distance(
           ai ARRAY<INT>, av ARRAY<DOUBLE>, bi ARRAY<INT>, bv ARRAY<DOUBLE>)
         RETURNS DOUBLE RETURN 1.0 - {_SPARSE_DOT} /
-          (sqrt({dot_sql('av', 'av', 'spark')}) * sqrt({dot_sql('bv', 'bv', 'spark')}))""",
+          ({V.norm_sql('av')} * {V.norm_sql('bv')})""",
     }
 )
 

@@ -9,21 +9,34 @@ Re-implements the pgvector operator surface the reference issues in SQL:
   - ``'[...]'::vector`` literal cast (demo/aws_rds_demo.py:68, README.md:292)
   - ``vector_dims()`` (reference demo/README.md:96)
 
+One definition: the ``*_sql(..., dialect)`` generators are the only place
+the vector math is written. ``dialect="spark"`` emits Spark SQL
+(higher-order functions); ``dialect="duckdb"`` emits the DuckDB
+equivalent with the SAME sequential fold, so float64 results are bitwise
+identical — which is what makes the differential oracle's value-hash
+comparison exact. Everything else renders them:
+  - each Column builder below is ``F.expr(<its generator>)``; its
+    arguments are SQL expression strings, a plain column name counts as
+    one, and :func:`col_sql` backtick-quotes any other name;
+  - the SQL-surface functions (functions/sql_registry.py), the query
+    registry's Spark SQL and its DuckDB oracles (queries.py), and the
+    ANN operators (knn, IVF, LSH, SQ8) splice the same text.
+A plan pays one parse per expression however long the vector: a 768-d
+query literal is one JVM call, not 768.
+
 Design for determinism + scale:
   - All arithmetic in float64 with a **sequential left fold**
-    (``F.aggregate``), so results are bitwise-reproducible and match a
-    DuckDB oracle using ``list_reduce`` with the same fold order.
+    (``aggregate`` / DuckDB ``list_reduce``), so results are
+    bitwise-reproducible across engines and partitionings.
   - Everything stays inside whole-stage codegen (higher-order functions are
     JVM expressions) — no serde boundary, vectorized parquet reads feed it
     directly. This is the hot inner loop of every kNN scan at 100 TB; a
     Python UDF here would be a 10-100x regression.
-
-Each ``*_sql`` helper emits the *same* computation as a Spark SQL or DuckDB
-SQL string so SQL-surface queries and the correctness oracle share one
-definition.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -39,53 +52,343 @@ def _d(x: Column) -> Column:
     return x.cast("double")
 
 
-def dot_product(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """Sequential-fold float64 dot product of two array<numeric> columns."""
-    prods = F.zip_with(_c(a), _c(b), lambda x, y: _d(x) * _d(y))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+def col_sql(name: str) -> str:
+    """A column name as Spark SQL text: backtick-quoted, so a name holding
+    a space, a dot or a backtick stays one identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def l2_norm(a: ColumnOrName) -> Column:
-    return F.sqrt(dot_product(a, a))
+# ---------------------------------------------------------------------------
+# SQL-text generators: the one definition of the vector math.
+# ---------------------------------------------------------------------------
 
 
-def cosine_similarity(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """``1 - (a <=> b)`` — cosine similarity in [-1, 1]."""
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
+def dot_sql(a: str, b: str, dialect: str = "spark") -> str:
+    if dialect == "spark":
+        return (
+            f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+            f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+        )
+    return (
+        f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+        f"list_transform(range(1, len({a}) + 1), i -> "
+        f"CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))), "
+        f"(acc, x) -> acc + x)"
+    )
 
 
-def cosine_distance_precomputed(
-    a: ColumnOrName, b: ColumnOrName, a_norm: Column, b_norm: Column
-) -> Column:
-    """``1 - dot/(a_norm * b_norm)`` with norms supplied, not recomputed:
-    ONE fold over the vectors per comparison instead of three. Bitwise
-    equal to :func:`cosine_distance` when the supplied norms were produced
-    by :func:`l2_norm` (same fold, same sqrt) — which is what lets a
-    norm-materialized layout (operators/ivf.py) keep the exact-path
-    oracle. At 100 TB the saved folds are the kNN hot loop."""
-    return F.lit(1.0) - dot_product(a, b) / (a_norm * b_norm)
+def norm_sql(a: str, dialect: str = "spark") -> str:
+    return f"sqrt({dot_sql(a, a, dialect)})"
 
 
-def cosine_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """pgvector ``<=>``: 1 - cosine similarity."""
-    return F.lit(1.0) - cosine_similarity(a, b)
+def fold_norm(vec: list[float]) -> float:
+    """:func:`norm_sql` evaluated driver-side: the same sequential float64
+    fold and sqrt, so the same bits."""
+    acc = 0.0
+    for x in vec:
+        acc += float(x) * float(x)
+    return math.sqrt(acc)
 
 
-def l2_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
+def l2sq_sql(a: str, b: str, dialect: str = "spark") -> str:
+    """Squared L2 distance as the same sequential left fold as
+    ``dot_sql`` — the KMeans/assignment kernel (no sqrt: argmin is
+    order-preserving and the squared grid keeps inertia exact)."""
+    if dialect == "spark":
+        return (
+            f"aggregate(zip_with({a}, {b}, (x, y) -> "
+            f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
+            f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
+            f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+        )
+    return (
+        f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+        f"list_transform(range(1, len({a}) + 1), i -> "
+        f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * "
+        f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)))), "
+        f"(acc, x) -> acc + x)"
+    )
+
+
+def l2_sql(a: str, b: str, dialect: str = "spark") -> str:
     """pgvector ``<->``: Euclidean distance."""
-    diffs = F.zip_with(_c(a), _c(b), lambda x, y: (_d(x) - _d(y)) * (_d(x) - _d(y)))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))
+    return f"sqrt({l2sq_sql(a, b, dialect)})"
 
 
-def inner_product_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """pgvector ``<#>``: negative inner product (so ORDER BY ASC = most similar)."""
-    return -dot_product(a, b)
+def ip_sql(a: str, b: str, dialect: str = "spark") -> str:
+    """pgvector ``<#>``: negative inner product (ORDER BY ASC = most
+    similar)."""
+    return f"(-{dot_sql(a, b, dialect)})"
 
 
-def l1_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
+def l1_sql(a: str, b: str, dialect: str = "spark") -> str:
     """pgvector ``<+>``: Manhattan distance."""
-    diffs = F.zip_with(_c(a), _c(b), lambda x, y: F.abs(_d(x) - _d(y)))
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
+    if dialect == "spark":
+        return (
+            f"aggregate(zip_with({a}, {b}, (x, y) -> "
+            f"abs(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
+            f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+        )
+    return (
+        f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+        f"list_transform(range(1, len({a}) + 1), i -> "
+        f"abs(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)))), "
+        f"(acc, x) -> acc + x)"
+    )
+
+
+def cosine_similarity_sql(a: str, b: str, dialect: str = "spark") -> str:
+    return f"({dot_sql(a, b, dialect)} / ({norm_sql(a, dialect)} * {norm_sql(b, dialect)}))"
+
+
+def cosine_distance_sql(a: str, b: str, dialect: str = "spark") -> str:
+    return f"(1.0 - {cosine_similarity_sql(a, b, dialect)})"
+
+
+# pgvector's ivfflat operator classes by metric name: <=>, <->, <#>
+DISTANCE_SQL = {"cosine": cosine_distance_sql, "l2": l2_sql, "ip": ip_sql}
+
+
+def cosine_distance_precomputed_sql(
+    a: str, b: str, a_norm: str, b_norm: str, dialect: str = "spark"
+) -> str:
+    """``1 - dot/(a_norm * b_norm)`` with the norms supplied, not
+    recomputed: ONE fold over the vectors per comparison instead of
+    three. Bitwise equal to :func:`cosine_distance_sql` when the norms
+    were produced by :func:`norm_sql` (same fold, same sqrt) — which is
+    what lets a norm-materialized layout (operators/ivf.py) keep the
+    exact-path oracle."""
+    return f"(1.0 - {dot_sql(a, b, dialect)} / ({a_norm} * {b_norm}))"
+
+
+def l2_normalize_sql(a: str, dialect: str = "spark") -> str:
+    """Unit-normalize. On Spark the norm fold is evaluated ONCE per row:
+    Catalyst has no let-binding and does not hoist loop-invariant
+    expressions out of higher-order lambdas, so ``transform(a, x -> x /
+    norm(a))`` would re-run the O(d) fold per element (O(d²) per
+    vector). Instead the norm is materialized into a d-length array via
+    ``array_repeat`` (its scalar argument is evaluated once) and divided
+    element-wise with ``zip_with`` — O(d) total, identical values. The
+    DuckDB form is the plain per-element division (an oracle, not a hot
+    path)."""
+    if dialect == "spark":
+        return (
+            f"zip_with({a}, array_repeat({norm_sql(a)}, size({a})), "
+            f"(x, n) -> CAST(x AS DOUBLE) / n)"
+        )
+    return f"list_transform({a}, x -> CAST(x AS DOUBLE) / {norm_sql(a, dialect)})"
+
+
+def vector_literal_sql(vec: list[float], dialect: str = "spark") -> str:
+    """Inline array literal (Spark needs ``array(...)``; DuckDB ``[...]``).
+    Values go through a STRING→DOUBLE cast, not a bare numeric literal:
+    both engines parse strings with correct rounding, whereas a bare
+    high-precision literal becomes DECIMAL first and the extra
+    decimal→double hop can land one ULP off (observed on DuckDB)."""
+    body = ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in vec)
+    return f"array({body})" if dialect == "spark" else f"[{body}]"
+
+
+def subvector_sql(a: str, start: int, count: int, dialect: str = "spark") -> str:
+    """pgvector ``subvector(v, start, count)`` — 1-based, count elements."""
+    if dialect == "spark":
+        return f"slice({a}, {start}, {count})"
+    return f"({a})[{start}:{start + count - 1}]"
+
+
+def chunk_vector_sql(
+    a: str, n_chunks: int, chunk_dim: int, dialect: str = "spark"
+) -> str:
+    """array<numeric>(n·d) → array<array>(n) of d-dim chunks — the
+    multi-vector (token-vector) view of a packed embedding. Chunk i is
+    elements [i·d+1 .. i·d+d] (1-based slice on both engines)."""
+    if n_chunks < 1 or chunk_dim < 1:
+        # sequence(0, -1) would count DOWN and yield garbage chunks
+        raise ValueError(
+            f"n_chunks and chunk_dim must be >= 1, got {n_chunks}/{chunk_dim}"
+        )
+    d = chunk_dim
+    if dialect == "spark":
+        return f"transform(sequence(0, {n_chunks - 1}), i -> slice({a}, i * {d} + 1, {d}))"
+    return f"list_transform(range(0, {n_chunks}), i -> ({a})[i * {d} + 1 : i * {d} + {d}])"
+
+
+def maxsim_sql(doc_chunks: str, q_chunks: str, dialect: str = "spark") -> str:
+    """ColBERT-style late-interaction MaxSim over inner product:
+    ``Σ over query chunks of max over doc chunks of dot(qc, dc)``.
+    Each dot is the sequential float64 fold, max over finite doubles is
+    order-independent, and the outer sum folds the query chunks in array
+    order — so both dialects are bitwise-equal."""
+    if dialect == "spark":
+        return (
+            f"aggregate(transform({q_chunks}, qc -> array_max(transform("
+            f"{doc_chunks}, dc -> {dot_sql('qc', 'dc')}))), "
+            f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+        )
+    return (
+        f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+        f"list_transform({q_chunks}, qc -> list_max(list_transform("
+        f"{doc_chunks}, dc -> {dot_sql('qc', 'dc', dialect)})))), "
+        f"(acc, x) -> acc + x)"
+    )
+
+
+# pgvector 0.7's `bit(n)` surface: binary_quantize(vector) -> bit string,
+# hamming_distance (`<~>`) and jaccard_distance (`<%>`) over bits. Sign
+# bits pack into 32-bit words stored in BIGINTs (an array<bigint>), so a
+# 64-dim embedding is 2 words — a 32x narrower shuffle/scan payload than
+# the float32 array, which is the whole point at 100 TB: the Hamming
+# prefilter pass reads ~3% of the bytes of the exact pass. 32 bits per
+# word (not 63) keeps every shift identical on Spark and DuckDB (DuckDB
+# range-checks `1 << 63`).
+
+_BITS_PER_WORD = 32
+
+
+def binary_quantize_sql(a: str, dim: int, dialect: str = "spark") -> str:
+    """array<numeric>(dim) → array<bigint> of ceil(dim/32) sign-bit words
+    (bit i of word w = 1 iff a[32w+i] > 0, matching pgvector's
+    binary_quantize threshold). Both dialects produce the identical
+    array<bigint>."""
+    nwords = (dim + _BITS_PER_WORD - 1) // _BITS_PER_WORD
+    w = _BITS_PER_WORD
+    if dialect == "spark":
+        return (
+            f"transform(sequence(0, {nwords - 1}), w -> "
+            f"aggregate(zip_with(slice({a}, w*{w}+1, {w}), sequence(0, {w - 1}), "
+            f"(v, i) -> CASE WHEN v > 0 THEN shiftleft(CAST(1 AS BIGINT), i) "
+            f"ELSE CAST(0 AS BIGINT) END), "
+            f"CAST(0 AS BIGINT), (acc, x) -> acc | x))"
+        )
+    return (
+        f"list_transform(range(0, {nwords}), w -> "
+        f"list_sum(list_transform({a}[w*{w}+1 : w*{w}+{w}], "
+        f"(v, i) -> CASE WHEN v > 0 THEN (1::BIGINT << (i-1)) "
+        f"ELSE 0::BIGINT END))::BIGINT)"
+    )
+
+
+def hamming_sql(a: str, b: str, dialect: str = "spark") -> str:
+    """popcount(a XOR b) over packed words → INT on both engines."""
+    if dialect == "spark":
+        return (
+            f"CAST(aggregate(zip_with({a}, {b}, (x, y) -> bit_count(x ^ y)), "
+            f"0, (acc, v) -> acc + v) AS INT)"
+        )
+    return (
+        f"CAST(list_sum(list_transform({a}, (x, i) -> "
+        f"bit_count(xor(x, {b}[i])))) AS INT)"
+    )
+
+
+def jaccard_bits_sql(a: str, b: str, dialect: str = "spark") -> str:
+    """1 - popcount(a AND b)/popcount(a OR b) → DOUBLE on both engines.
+    Two exact integer popcounts and one double division — deterministic
+    across engines with no fold-order caveats."""
+    if dialect == "spark":
+        inter = (
+            f"aggregate(zip_with({a}, {b}, (x, y) -> bit_count(x & y)), "
+            f"0, (acc, v) -> acc + v)"
+        )
+        union = (
+            f"aggregate(zip_with({a}, {b}, (x, y) -> bit_count(x | y)), "
+            f"0, (acc, v) -> acc + v)"
+        )
+    else:
+        inter = f"list_sum(list_transform({a}, (x, i) -> bit_count(x & {b}[i])))"
+        union = f"list_sum(list_transform({a}, (x, i) -> bit_count(x | {b}[i])))"
+    return f"(1.0 - CAST({inter} AS DOUBLE) / CAST({union} AS DOUBLE))"
+
+
+# ---------------------------------------------------------------------------
+# Column API: each builder renders its generator. Arguments are SQL
+# expression strings (a column name is one; see col_sql).
+# ---------------------------------------------------------------------------
+
+
+def dot_product(a: str, b: str) -> Column:
+    """Sequential-fold float64 dot product of two array<numeric>s."""
+    return F.expr(dot_sql(a, b))
+
+
+def l2_norm(a: str) -> Column:
+    return F.expr(norm_sql(a))
+
+
+def cosine_similarity(a: str, b: str) -> Column:
+    """``1 - (a <=> b)`` — cosine similarity in [-1, 1]."""
+    return F.expr(cosine_similarity_sql(a, b))
+
+
+def cosine_distance(a: str, b: str) -> Column:
+    """pgvector ``<=>``: 1 - cosine similarity."""
+    return F.expr(cosine_distance_sql(a, b))
+
+
+def cosine_distance_precomputed(a: str, b: str, a_norm: str, b_norm: str) -> Column:
+    """:func:`cosine_distance` with each side's :func:`l2_norm` supplied."""
+    return F.expr(cosine_distance_precomputed_sql(a, b, a_norm, b_norm))
+
+
+def l2_distance(a: str, b: str) -> Column:
+    """pgvector ``<->``: Euclidean distance."""
+    return F.expr(l2_sql(a, b))
+
+
+def inner_product_distance(a: str, b: str) -> Column:
+    """pgvector ``<#>``: negative inner product."""
+    return F.expr(ip_sql(a, b))
+
+
+def l1_distance(a: str, b: str) -> Column:
+    """pgvector ``<+>``: Manhattan distance."""
+    return F.expr(l1_sql(a, b))
+
+
+def l2_normalize(a: str) -> Column:
+    """Unit-normalize; with normalized vectors cosine top-k reduces to a
+    dot-product top-k (one fold instead of three) — the fast path for
+    repeated kNN at scale."""
+    return F.expr(l2_normalize_sql(a))
+
+
+def vector_literal(vec: list[float]) -> Column:
+    """Driver-side constant vector → array<double> literal column."""
+    return F.expr(vector_literal_sql(vec))
+
+
+def subvector(a: str, start: int, count: int) -> Column:
+    """pgvector 0.7 ``subvector(vector, start, count)`` — 1-based start,
+    like the Postgres function. The Matryoshka-retrieval primitive: with
+    MRL-trained embeddings, distance on a dim-prefix is a cheap coarse
+    rank whose cost scales with the prefix, not the full dimension."""
+    return F.expr(subvector_sql(a, start, count))
+
+
+def chunk_vector(a: str, n_chunks: int, chunk_dim: int) -> Column:
+    """The multi-vector view of a packed embedding (:func:`chunk_vector_sql`)."""
+    return F.expr(chunk_vector_sql(a, n_chunks, chunk_dim))
+
+
+def maxsim_score(doc_chunks: str, q_chunks: str) -> Column:
+    """Late-interaction MaxSim (:func:`maxsim_sql`) — the vs_maxsim_topk
+    kernel."""
+    return F.expr(maxsim_sql(doc_chunks, q_chunks))
+
+
+def binary_quantize(a: str, dim: int) -> Column:
+    """Sign-bit words of a dim-d vector (:func:`binary_quantize_sql`)."""
+    return F.expr(binary_quantize_sql(a, dim))
+
+
+def hamming_distance(a: str, b: str) -> Column:
+    """pgvector ``<~>`` over packed sign-bit words: popcount(a XOR b)."""
+    return F.expr(hamming_sql(a, b))
+
+
+def jaccard_bit_distance(a: str, b: str) -> Column:
+    """pgvector ``<%>``: 1 - popcount(a AND b) / popcount(a OR b)."""
+    return F.expr(jaccard_bits_sql(a, b))
 
 
 def to_vector(s: ColumnOrName) -> Column:
@@ -100,68 +403,6 @@ def to_vector(s: ColumnOrName) -> Column:
 def vector_dims(a: ColumnOrName) -> Column:
     """pgvector ``vector_dims()`` (reference demo/README.md:96)."""
     return F.size(_c(a))
-
-
-def l2_normalize(a: ColumnOrName) -> Column:
-    """Unit-normalize; with normalized vectors cosine top-k reduces to a
-    dot-product top-k (one fold instead of three) — the fast path for
-    repeated kNN at scale.
-
-    The norm fold is evaluated ONCE per row: Catalyst has no let-binding
-    and does not hoist loop-invariant expressions out of higher-order
-    lambdas, so ``transform(a, x -> x / l2_norm(a))`` would re-run the
-    O(d) fold per element (O(d²) per vector). Instead the norm is
-    materialized into a d-length array via ``array_repeat`` (its scalar
-    argument is evaluated once) and divided element-wise with
-    ``zip_with`` — O(d) total, identical values."""
-    col = _c(a)
-    norms = F.array_repeat(l2_norm(col), F.size(col))
-    return F.zip_with(col, norms, lambda x, n: _d(x) / n)
-
-
-def chunk_vector(a: ColumnOrName, n_chunks: int, chunk_dim: int) -> Column:
-    """array<numeric>(n·d) → array<array>(n) of d-dim chunks — the
-    multi-vector (token-vector) view of a packed embedding. Chunk i is
-    elements [i·d+1 .. i·d+d] (1-based slice, matching DuckDB's)."""
-    if n_chunks < 1 or chunk_dim < 1:
-        # sequence(0, -1) would count DOWN and yield garbage chunks
-        raise ValueError(
-            f"n_chunks and chunk_dim must be >= 1, got {n_chunks}/{chunk_dim}"
-        )
-    col = _c(a)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_chunks - 1)),
-        lambda i: F.slice(col, i * F.lit(chunk_dim) + F.lit(1), chunk_dim),
-    )
-
-
-def maxsim_score(doc_chunks: Column, q_chunks: Column) -> Column:
-    """ColBERT-style late-interaction MaxSim over inner product:
-    ``Σ over query chunks of max over doc chunks of dot(qc, dc)``.
-    Deterministic: each dot is the sequential float64 fold, max over
-    finite doubles is order-independent, and the outer sum folds the
-    query chunks in array order — so the same nested expression in
-    DuckDB SQL is bitwise-equal (the vs_maxsim_topk oracle)."""
-    per_q = F.transform(
-        q_chunks,
-        lambda qc: F.array_max(
-            F.transform(doc_chunks, lambda dc: dot_product(qc, dc))
-        ),
-    )
-    return F.aggregate(per_q, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def vector_literal(vec: list[float]) -> Column:
-    """Driver-side constant vector → array<double> literal column."""
-    return F.array(*[F.lit(float(v)) for v in vec])
-
-
-def subvector(a: ColumnOrName, start: int, count: int) -> Column:
-    """pgvector 0.7 ``subvector(vector, start, count)`` — 1-based start,
-    like the Postgres function. The Matryoshka-retrieval primitive: with
-    MRL-trained embeddings, distance on a dim-prefix is a cheap coarse
-    rank whose cost scales with the prefix, not the full dimension."""
-    return F.slice(_c(a), start, count)
 
 
 # -- scalar quantization (int8) ---------------------------------------------
@@ -204,189 +445,3 @@ def half_quantize(a: ColumnOrName) -> Column:
         return F.when(d == 0.0, F.lit(0.0)).otherwise(F.round(d / qtm) * qtm)
 
     return F.transform(_c(a), snap)
-
-
-# -- binary quantization (bit vectors) --------------------------------------
-# pgvector 0.7's `bit(n)` surface: binary_quantize(vector) -> bit string,
-# hamming_distance (`<~>`) and jaccard_distance (`<%>`) over bits. Sign
-# bits pack into 32-bit words stored in BIGINTs (an array<bigint>), so a
-# 64-dim embedding is 2 words — a 32x narrower shuffle/scan payload than
-# the float32 array, which is the whole point at 100 TB: the Hamming
-# prefilter pass reads ~3% of the bytes of the exact pass. 32 bits per
-# word (not 63) keeps every shift identical on Spark and DuckDB (DuckDB
-# range-checks `1 << 63`).
-
-_BITS_PER_WORD = 32
-
-
-def binary_quantize(a: ColumnOrName, dim: int) -> Column:
-    """array<numeric>(dim) → array<bigint> of ceil(dim/32) sign-bit words
-    (bit i of word w = 1 iff a[32w+i] > 0, matching pgvector's
-    binary_quantize threshold)."""
-    nwords = (dim + _BITS_PER_WORD - 1) // _BITS_PER_WORD
-    col = _c(a)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(nwords - 1)),
-        lambda w: F.aggregate(
-            F.zip_with(
-                F.slice(col, w * _BITS_PER_WORD + 1, _BITS_PER_WORD),
-                F.sequence(F.lit(0), F.lit(_BITS_PER_WORD - 1)),
-                # pyspark's shiftleft() only takes a literal int shift, so
-                # the word weight is 2^i via pow — exact in float64 for
-                # i <= 31, then an exact cast back to BIGINT.
-                lambda v, i: F.when(
-                    v > 0, F.pow(F.lit(2.0), i.cast("double")).cast("bigint")
-                ).otherwise(F.lit(0).cast("bigint")),
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc.bitwiseOR(x),
-        ),
-    )
-
-
-def hamming_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """pgvector ``<~>`` over packed sign-bit words: popcount(a XOR b)."""
-    return F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: F.bit_count(x.bitwiseXOR(y))),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ).cast("int")
-
-
-def jaccard_bit_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """pgvector ``<%>``: 1 - popcount(a AND b) / popcount(a OR b).
-    Two exact integer popcounts and one double division — deterministic
-    across engines with no fold-order caveats."""
-    inter = F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: F.bit_count(x.bitwiseAND(y))),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    union = F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: F.bit_count(x.bitwiseOR(y))),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    return F.lit(1.0) - inter.cast("double") / union.cast("double")
-
-
-# ---------------------------------------------------------------------------
-# SQL-text generators.  `dialect="spark"` emits Spark SQL (higher-order
-# functions); `dialect="duckdb"` emits the DuckDB equivalent with the SAME
-# sequential fold so float64 results are bitwise identical — this is what
-# makes the driver's value-hash comparison deterministic.
-# ---------------------------------------------------------------------------
-
-
-def dot_sql(a: str, b: str, dialect: str = "spark") -> str:
-    if dialect == "spark":
-        return (
-            f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-    return (
-        f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        f"list_transform(range(1, len({a}) + 1), i -> "
-        f"CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))), "
-        f"(acc, x) -> acc + x)"
-    )
-
-
-def norm_sql(a: str, dialect: str = "spark") -> str:
-    return f"sqrt({dot_sql(a, a, dialect)})"
-
-
-def l2sq_sql(a: str, b: str, dialect: str = "spark") -> str:
-    """Squared L2 distance as the same sequential left fold as
-    ``dot_sql`` — the KMeans/assignment kernel (no sqrt: argmin is
-    order-preserving and the squared grid keeps inertia exact)."""
-    if dialect == "spark":
-        return (
-            f"aggregate(zip_with({a}, {b}, (x, y) -> "
-            f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
-            f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-            f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-    return (
-        f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        f"list_transform(range(1, len({a}) + 1), i -> "
-        f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * "
-        f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)))), "
-        f"(acc, x) -> acc + x)"
-    )
-
-
-def cosine_similarity_sql(a: str, b: str, dialect: str = "spark") -> str:
-    return f"({dot_sql(a, b, dialect)} / ({norm_sql(a, dialect)} * {norm_sql(b, dialect)}))"
-
-
-def cosine_distance_sql(a: str, b: str, dialect: str = "spark") -> str:
-    return f"(1.0 - {cosine_similarity_sql(a, b, dialect)})"
-
-
-def vector_literal_sql(vec: list[float], dialect: str = "spark") -> str:
-    """Inline array literal (Spark needs ``array(...)``; DuckDB ``[...]``).
-    Values go through a STRING→DOUBLE cast, not a bare numeric literal:
-    both engines parse strings with correct rounding, whereas a bare
-    high-precision literal becomes DECIMAL first and the extra
-    decimal→double hop can land one ULP off (observed on DuckDB)."""
-    body = ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in vec)
-    return f"array({body})" if dialect == "spark" else f"[{body}]"
-
-
-def binary_quantize_sql(a: str, dim: int, dialect: str = "spark") -> str:
-    """Sign-bit packing into 32-bit words (see :func:`binary_quantize`).
-    Both dialects produce the identical array<bigint>."""
-    nwords = (dim + _BITS_PER_WORD - 1) // _BITS_PER_WORD
-    w = _BITS_PER_WORD
-    if dialect == "spark":
-        return (
-            f"transform(sequence(0, {nwords - 1}), w -> "
-            f"aggregate(zip_with(slice({a}, w*{w}+1, {w}), sequence(0, {w - 1}), "
-            f"(v, i) -> CASE WHEN v > 0 THEN shiftleft(CAST(1 AS BIGINT), i) "
-            f"ELSE CAST(0 AS BIGINT) END), "
-            f"CAST(0 AS BIGINT), (acc, x) -> acc | x))"
-        )
-    return (
-        f"list_transform(range(0, {nwords}), w -> "
-        f"list_sum(list_transform({a}[w*{w}+1 : w*{w}+{w}], "
-        f"(v, i) -> CASE WHEN v > 0 THEN (1::BIGINT << (i-1)) "
-        f"ELSE 0::BIGINT END))::BIGINT)"
-    )
-
-
-def hamming_sql(a: str, b: str, dialect: str = "spark") -> str:
-    """popcount(a XOR b) over packed words → INT on both engines."""
-    if dialect == "spark":
-        return (
-            f"CAST(aggregate(zip_with({a}, {b}, (x, y) -> bit_count(x ^ y)), "
-            f"0, (acc, v) -> acc + v) AS INT)"
-        )
-    return (
-        f"CAST(list_sum(list_transform({a}, (x, i) -> "
-        f"bit_count(xor(x, {b}[i])))) AS INT)"
-    )
-
-
-def jaccard_bits_sql(a: str, b: str, dialect: str = "spark") -> str:
-    """1 - popcount(a AND b)/popcount(a OR b) → DOUBLE on both engines."""
-    if dialect == "spark":
-        inter = (
-            f"aggregate(zip_with({a}, {b}, (x, y) -> bit_count(x & y)), "
-            f"0, (acc, v) -> acc + v)"
-        )
-        union = (
-            f"aggregate(zip_with({a}, {b}, (x, y) -> bit_count(x | y)), "
-            f"0, (acc, v) -> acc + v)"
-        )
-    else:
-        inter = f"list_sum(list_transform({a}, (x, i) -> bit_count(x & {b}[i])))"
-        union = f"list_sum(list_transform({a}, (x, i) -> bit_count(x | {b}[i])))"
-    return f"(1.0 - CAST({inter} AS DOUBLE) / CAST({union} AS DOUBLE))"
-
-
-def subvector_sql(a: str, start: int, count: int, dialect: str = "spark") -> str:
-    """pgvector ``subvector(v, start, count)`` — 1-based, count elements."""
-    if dialect == "spark":
-        return f"slice({a}, {start}, {count})"
-    return f"({a})[{start}:{start + count - 1}]"

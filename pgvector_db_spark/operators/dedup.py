@@ -1072,7 +1072,7 @@ def embedding_top_pairs(
     out_block = [F.col("_blk").alias(block_col)] if block_col else []
     return (
         pairs.filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("similarity", cosine_similarity(F.col("_va"), F.col("_vb")))
+        .withColumn("similarity", cosine_similarity("_va", "_vb"))
         .select(*out_block, "id_a", "id_b", "similarity")
         .orderBy(F.col("similarity").desc(), F.col("id_a").asc(), F.col("id_b").asc())
         .limit(top)
@@ -1110,7 +1110,7 @@ def embedding_near_dup_survivors(
     pairs = a.join(b, "_blk") if block_col else a.crossJoin(b)
     dominated = (
         pairs.filter(F.col("id_a") < F.col("id_b"))
-        .filter(cosine_similarity(F.col("_va"), F.col("_vb")) >= threshold)
+        .filter(cosine_similarity("_va", "_vb") >= threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )
@@ -1166,7 +1166,7 @@ def embedding_near_dup_survivors_ivf(
     dominated = (
         a.join(b, "list_id")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(cosine_similarity(F.col("_va"), F.col("_vb")) >= threshold)
+        .filter(cosine_similarity("_va", "_vb") >= threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )

@@ -41,6 +41,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from pgvector_db_spark.functions.vector import (
+    DISTANCE_SQL,
+    col_sql,
+    cosine_distance_precomputed,
+    cosine_distance_precomputed_sql,
+    fold_norm,
+    l2_norm,
+    l2_sql,
+)
 from pgvector_db_spark.operators.knn import knn
 from pgvector_db_spark.sources.commitlog import commit_json, file_lock, read_json
 from pgvector_db_spark.utils import local_relation_df, local_rows_df
@@ -184,7 +193,7 @@ class IVFIndex:
         v = _VERSIONS.get(self.path)
         if v is None or v.version != m["version"]:
             centers = sorted(
-                (r["list_id"], list(r["centroid"]), _fold_norm(r["centroid"]))
+                (r["list_id"], list(r["centroid"]), fold_norm(r["centroid"]))
                 for r in self.spark.read.parquet(self.centroids_path).collect()
             )
             schema = self.spark.read.parquet(self.data_path).schema
@@ -402,7 +411,7 @@ class IVFIndex:
 
         qrows = queries.select(q_id_col, q_vec_col).collect()
         pairs = [
-            (r[q_id_col], lid, qv, _fold_norm(qv))
+            (r[q_id_col], lid, qv, fold_norm(qv))
             for r in qrows
             for qv in [[float(x) for x in r[q_vec_col]]]
             for lid, _ in self._rank_lists(qv, v)[:nprobe]
@@ -426,8 +435,6 @@ class IVFIndex:
         No ``collect`` anywhere — driver memory never bounds the batch."""
         from pyspark.sql.window import Window
 
-        from pgvector_db_spark.functions.vector import dot_product, l2_norm
-
         v = v or self._load()
         cents = local_rows_df(
             self.spark,
@@ -436,17 +443,18 @@ class IVFIndex:
         )
         q = queries.select(
             F.col(q_id_col).cast("bigint").alias(q_id_col),
-            F.transform(F.col(q_vec_col), lambda x: x.cast("double")).alias(
-                "_qv"
-            ),
-        ).withColumn("_qnorm", l2_norm(F.col("_qv")))
+            F.expr(
+                f"transform({col_sql(q_vec_col)}, x -> CAST(x AS DOUBLE))"
+            ).alias("_qv"),
+        ).withColumn("_qnorm", l2_norm("_qv"))
         # same zero-norm guard as _rank_lists (`if qn and cn else 1.0`)
-        cdist = F.when(
-            (F.col("_qnorm") != 0.0) & (F.col("_cnorm") != 0.0),
-            F.lit(1.0)
-            - dot_product(F.col("_qv"), F.col("_centroid"))
-            / (F.col("_qnorm") * F.col("_cnorm")),
-        ).otherwise(F.lit(1.0))
+        cdist = F.expr(
+            "CASE WHEN _qnorm != 0.0 AND _cnorm != 0.0 THEN "
+            + cosine_distance_precomputed_sql(
+                "_qv", "_centroid", "_qnorm", "_cnorm"
+            )
+            + " ELSE CAST(1.0 AS DOUBLE) END"
+        )
         w = Window.partitionBy(q_id_col).orderBy(
             F.col("_cdist").asc(), F.col("list_id").asc()
         )
@@ -473,10 +481,6 @@ class IVFIndex:
         per-query top-k via WindowGroupLimit."""
         from pyspark.sql.window import Window
 
-        from pgvector_db_spark.functions.vector import (
-            cosine_distance_precomputed,
-        )
-
         if probed_lists is not None:
             # driver mode knows the probed union at plan time: direct
             # partition-path read, same fast path as the point query
@@ -485,7 +489,7 @@ class IVFIndex:
             data = self._data(v)
         probe = F.broadcast(probe_df) if broadcast_probes else probe_df
         dist = cosine_distance_precomputed(
-            F.col(self.vec_col), F.col("_qv"), F.col("_vnorm"), F.col("_qnorm")
+            col_sql(self.vec_col), "_qv", "_vnorm", "_qnorm"
         )
         scored = data.join(probe, "list_id").withColumn("distance", dist)
         w = Window.partitionBy(q_id_col).orderBy(
@@ -543,11 +547,6 @@ class IVFIndex:
         """
         from pyspark.sql.window import Window
 
-        from pgvector_db_spark.functions.vector import (
-            cosine_distance,
-            inner_product_distance,
-            l2_distance,
-        )
         from pgvector_db_spark.operators.knn import knn_batch
 
         v = self._load()
@@ -573,11 +572,7 @@ class IVFIndex:
         n_lists = len(v.centers)
         # centroid rank per query: the same (distance asc, list_id asc)
         # order search()'s _rank_lists applies
-        dist = {
-            "cosine": cosine_distance,
-            "l2": l2_distance,
-            "ip": inner_product_distance,
-        }[v.metric](F.col("_centroid"), F.col("_qv"))
+        dist = F.expr(DISTANCE_SQL[v.metric]("_centroid", "_qv"))
         w = Window.partitionBy(q_id_col).orderBy(
             F.col("_cdist").asc(), F.col("list_id").asc()
         )
@@ -811,15 +806,6 @@ def deterministic_sample_centroids(
     return [[float(v) for v in c] for c in _kmeans(x, lists, 10, rng)]
 
 
-def _fold_norm(vec: list[float]) -> float:
-    """sqrt of the sequential float64 sum of squares: the same fold, and
-    so the same bits, as :func:`functions.vector.l2_norm`."""
-    acc = 0.0
-    for x in vec:
-        acc += x * x
-    return math.sqrt(acc)
-
-
 def _assign_lists(
     df: DataFrame, centers: list[list[float]], metric: str, vec_col: str
 ) -> DataFrame:
@@ -842,14 +828,8 @@ def _assign_lists(
     pad with nulls — and, under cosine, a zero-norm row raise in-plan,
     like ``knn()``'s dimension guard: no extra job.
     """
-    from pgvector_db_spark.functions.vector import (
-        cosine_distance_precomputed,
-        l2_distance,
-        l2_norm,
-    )
-
     dim = len(centers[0])
-    cents = [(i, c, _fold_norm(c)) for i, c in enumerate(centers)]
+    cents = [(i, c, fold_norm(c)) for i, c in enumerate(centers)]
     if metric == "cosine" and any(cn == 0.0 for _, _, cn in cents):
         raise ValueError("ivf: zero-norm list center has no cosine distance")
     cents_df = local_rows_df(
@@ -860,19 +840,15 @@ def _assign_lists(
     )
     vec, vnorm = F.col(vec_col), F.col("_vnorm")
     if metric == "cosine":
-        def dist(c):
-            return cosine_distance_precomputed(
-                vec, c["centroid"], vnorm, c["cnorm"]
-            )
-    else:
-        def dist(c):
-            return l2_distance(vec, c["centroid"])
-    nearest = F.array_min(
-        F.transform(
-            "_cents",
-            lambda c: F.struct(dist(c).alias("d"), c["list_id"].alias("l")),
+        dist = cosine_distance_precomputed_sql(
+            col_sql(vec_col), "cent.centroid", "_vnorm", "cent.cnorm"
         )
-    )["l"]
+    else:
+        dist = l2_sql(col_sql(vec_col), "cent.centroid")
+    nearest = F.expr(
+        f"array_min(transform(_cents, cent -> named_struct("
+        f"'d', {dist}, 'l', cent.list_id))).l"
+    )
     if metric == "cosine":
         nearest = F.when(vnorm != 0.0, nearest).otherwise(
             F.raise_error(
@@ -890,7 +866,7 @@ def _assign_lists(
     )
     return (
         df.crossJoin(F.broadcast(cents_df))
-        .withColumn("_vnorm", l2_norm(vec))
+        .withColumn("_vnorm", l2_norm(col_sql(vec_col)))
         .withColumn("list_id", list_id)
         .drop("_cents")
     )
@@ -905,23 +881,13 @@ def _probe_cost(idx: IVFIndex, queries: DataFrame, nprobe: int,
     (queries x lists centroid ranking, lists-row size frame)."""
     from pyspark.sql.window import Window
 
-    from pgvector_db_spark.functions.vector import (
-        cosine_distance,
-        inner_product_distance,
-        l2_distance,
-    )
-
     v = idx._load()
     cents = local_rows_df(
         idx.spark,
         [(lid, c) for lid, c, _ in v.centers],
         "list_id int, _centroid array<double>",
     )
-    dist = {
-        "cosine": cosine_distance,
-        "l2": l2_distance,
-        "ip": inner_product_distance,
-    }[v.metric](F.col("_centroid"), F.col("_qv"))
+    dist = F.expr(DISTANCE_SQL[v.metric]("_centroid", "_qv"))
     w = Window.partitionBy(q_id_col).orderBy(
         F.col("_cdist").asc(), F.col("list_id").asc()
     )

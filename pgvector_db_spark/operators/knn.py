@@ -29,28 +29,30 @@ so top-k row sets are deterministic.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pgvector_db_spark.functions.vector import (
+    DISTANCE_SQL,
+    col_sql,
     cosine_distance,
+    cosine_distance_precomputed_sql,
     cosine_similarity,
-    inner_product_distance,
-    l2_distance,
-    vector_literal,
+    fold_norm,
+    vector_literal_sql,
 )
 
 
 def knn(
     df: DataFrame,
-    query_vec: list[float] | Column,
+    query_vec: list[float],
     k: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     distance: str = "cosine",
     norm_col: str | None = None,
 ) -> DataFrame:
-    """Exact top-k nearest neighbors of ``query_vec``.
+    """Exact top-k nearest neighbors of the list ``query_vec``.
 
     Returns the input columns plus ``distance`` and ``similarity``
     (cosine), ordered nearest-first with ``id_col`` as tie-break.
@@ -58,63 +60,37 @@ def knn(
     ``norm_col`` names a column holding each row's precomputed
     :func:`l2_norm` (a norm-materialized layout, e.g. the IVF index):
     scoring then folds over each vector ONCE (the dot product) instead of
-    three times, with bitwise-identical distances. Requires a list query
-    (the query norm is the same sequential fold, driver-side).
+    three times, with bitwise-identical distances (the query norm is the
+    same sequential fold, driver-side).
+
+    The distance with its dimension guard, and the similarity, are SQL
+    text from the functions/vector.py generators with the query inlined
+    as one literal, so building the plan costs the same few JVM calls at
+    any dimension.
     """
-    if distance not in ("cosine", "l2", "ip"):
+    if distance not in DISTANCE_SQL:
         raise ValueError(f"unsupported distance: {distance}")
-    q = vector_literal(query_vec) if isinstance(query_vec, list) else query_vec
-    if distance != "cosine":
-        # pgvector's other ivfflat operator classes: vector_l2_ops (<->)
-        # and vector_ip_ops (<#>, negative inner product). similarity is
-        # the usual negation so the output schema stays stable.
-        from pgvector_db_spark.functions.vector import (
-            inner_product_distance,
-            l2_distance,
-        )
-
-        fn = l2_distance if distance == "l2" else inner_product_distance
-        dist = fn(F.col(vec_col), q)
-    elif norm_col is not None and isinstance(query_vec, list):
-        import math
-
-        from pgvector_db_spark.functions.vector import (
-            cosine_distance_precomputed,
-        )
-
-        acc = 0.0
-        for x in query_vec:  # same sequential fold as l2_norm's aggregate
-            acc += float(x) * float(x)
-        dist = cosine_distance_precomputed(
-            F.col(vec_col), q, F.col(norm_col), F.lit(math.sqrt(acc))
-        )
+    v, q = col_sql(vec_col), vector_literal_sql(query_vec)
+    if distance == "cosine" and norm_col is not None:
+        qnorm = f"CAST('{fold_norm(query_vec)!r}' AS DOUBLE)"
+        dist = cosine_distance_precomputed_sql(v, q, col_sql(norm_col), qnorm)
     else:
-        dist = cosine_distance(F.col(vec_col), q)
-    if isinstance(query_vec, list):
-        # dimension guard inside the expression (no extra driver job):
-        # zip_with pads the shorter side with nulls, which would silently
-        # poison distances — pgvector errors on dim mismatch, so do we
-        dist = F.when(
-            F.size(F.col(vec_col)) == len(query_vec), dist
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"knn: query vector dim {len(query_vec)} != "
-                        f"{vec_col} dim "
-                    ),
-                    F.size(F.col(vec_col)).cast("string"),
-                )
-            )
-        )
-    sim = (
-        F.lit(1.0) - F.col("distance")
-        if distance == "cosine"
-        else -F.col("distance")  # ip: back to the raw inner product
+        dist = DISTANCE_SQL[distance](v, q)
+    # dimension guard inside the expression (no extra driver job):
+    # zip_with pads the shorter side with nulls, which would silently
+    # poison distances — pgvector errors on dim mismatch, so do we
+    msg = f"knn: query vector dim {len(query_vec)} != {vec_col} dim "
+    msg = msg.replace("\\", "\\\\").replace("'", "\\'")
+    dist = (
+        f"CASE WHEN size({v}) = {len(query_vec)} THEN {dist} "
+        f"ELSE raise_error(concat('{msg}', CAST(size({v}) AS STRING))) END"
     )
+    # l2 and ip (pgvector's other operator classes) negate, so the schema
+    # is stable; for ip that is the raw inner product
+    sim = "(1.0 - distance)" if distance == "cosine" else "(-distance)"
     return (
-        df.withColumn("distance", dist)
-        .withColumn("similarity", sim)
+        df.withColumn("distance", F.expr(dist))
+        .withColumn("similarity", F.expr(sim))
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -139,7 +115,7 @@ def query_by_example(
         .limit(1)
     )
     joined = df.crossJoin(F.broadcast(example)).filter(F.col(id_col) != example_id)
-    dist = cosine_distance(F.col(vec_col), F.col("_query_vec"))
+    dist = cosine_distance(col_sql(vec_col), "_query_vec")
     return (
         joined.withColumn("similarity", F.lit(1.0) - dist)
         .drop("_query_vec")
@@ -179,16 +155,11 @@ def knn_batch(
     """
     from pyspark.sql.window import Window
 
-    dist_fn = {
-        "cosine": cosine_distance,
-        "l2": l2_distance,
-        "ip": inner_product_distance,
-    }.get(metric)
-    if dist_fn is None:
+    if metric not in DISTANCE_SQL:
         raise ValueError(f"unsupported metric: {metric!r}")
     q = queries.select(F.col(q_id_col), F.col(q_vec_col).alias("_qv"))
     scored = df.crossJoin(F.broadcast(q)).withColumn(
-        "distance", dist_fn(F.col(vec_col), F.col("_qv"))
+        "distance", F.expr(DISTANCE_SQL[metric](col_sql(vec_col), "_qv"))
     )
     w = Window.partitionBy(q_id_col).orderBy(
         F.col("distance").asc(), F.col(id_col).asc()
@@ -216,7 +187,7 @@ def pairwise_avg_similarity(
     b = df.select(F.col(id_col).alias("_idb"), F.col(vec_col).alias("_vb"))
     pairs = a.crossJoin(b).filter(F.col("_ida") != F.col("_idb"))
     return pairs.agg(
-        F.avg(cosine_similarity(F.col("_va"), F.col("_vb"))).alias("avg_similarity")
+        F.avg(cosine_similarity("_va", "_vb")).alias("avg_similarity")
     )
 
 
@@ -227,5 +198,7 @@ def self_similarity_check(
     (demo/similarity_search_demo.py:136-143). Doubles as a unit test."""
     return df.select(
         F.col(id_col),
-        cosine_similarity(F.col(vec_col), F.col(vec_col)).alias("self_similarity"),
+        cosine_similarity(col_sql(vec_col), col_sql(vec_col)).alias(
+            "self_similarity"
+        ),
     )

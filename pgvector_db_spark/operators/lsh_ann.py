@@ -18,8 +18,9 @@ Scale notes:
     probe filter becomes partition pruning — a 1000-executor cluster
     reads only ``probes/2^num_bits`` of the data.
   - Hyperplanes are seeded-deterministic and tiny (num_bits × dim
-    doubles); they ride into the plan as literals — no broadcast, no
-    side file.
+    doubles); they ride into the plan inside ONE SQL expression (the
+    functions/vector.py generators) — no broadcast, no side file, and
+    no per-element JVM call while the plan is built.
   - recall/latency tradeoff = (num_bits, hamming_probe), mirroring
     ivfflat's (lists, nprobe).
 """
@@ -31,9 +32,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pgvector_db_spark.functions.vector import (
+    col_sql,
     cosine_distance,
-    dot_product,
-    vector_literal,
+    cosine_distance_precomputed,
+    dot_sql,
+    fold_norm,
+    l2_norm,
+    vector_literal_sql,
 )
 from pgvector_db_spark.utils import local_rows_df
 from pgvector_db_spark.operators.knn import knn
@@ -45,14 +50,16 @@ def hyperplanes(dim: int, num_bits: int, seed: int = 42) -> list[list[float]]:
     return [[float(x) for x in row] for row in rng.standard_normal((num_bits, dim))]
 
 
-def lsh_signature(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Signature int: bit j set iff dot(v, h_j) >= 0. Pure JVM expression
-    (float64 sequential fold, same kernel as the distance math)."""
-    sig: Column = F.lit(0)
-    for j, h in enumerate(planes):
-        d = dot_product(vec_col, vector_literal(h))
-        sig = sig + F.when(d >= 0.0, F.lit(1 << j)).otherwise(F.lit(0))
-    return sig.cast("int")
+def lsh_signature(vec: str, planes: list[list[float]]) -> Column:
+    """Signature int of the SQL expression ``vec``: bit j set iff
+    dot(v, h_j) >= 0. Pure JVM expression (float64 sequential fold, the
+    same kernel as the distance math)."""
+    bits = "".join(
+        f" + CASE WHEN {dot_sql(vec, vector_literal_sql(h))} >= 0.0 "
+        f"THEN {1 << j} ELSE 0 END"
+        for j, h in enumerate(planes)
+    )
+    return F.expr(f"CAST((0{bits}) AS INT)")
 
 
 def _signature_of(vec: list[float], planes: list[list[float]]) -> int:
@@ -118,9 +125,9 @@ def similarity_join(
     l2 = left.select(
         F.col(id_col).alias("id_left"),
         F.col(vec_col).alias("_vl"),
-        lsh_signature(F.col(vec_col), planes).alias("_sig"),
+        lsh_signature(col_sql(vec_col), planes).alias("_sig"),
     )
-    rsig = lsh_signature(F.col(vec_col), planes)
+    rsig = lsh_signature(col_sql(vec_col), planes)
     r2 = right.select(
         F.col(id_col).alias("id_right"),
         F.col(vec_col).alias("_vr"),
@@ -128,7 +135,7 @@ def similarity_join(
             F.array(*[rsig.bitwiseXOR(F.lit(m)) for m in masks])
         ).alias("_sig"),
     )
-    sim = 1.0 - cosine_distance(F.col("_vl"), F.col("_vr"))
+    sim = 1.0 - cosine_distance("_vl", "_vr")
     return (
         l2.join(r2, "_sig")
         .withColumn("similarity", sim)
@@ -151,15 +158,13 @@ def build_lsh_layout(
     so the probe filter in :func:`search_lsh_layout` is partition pruning
     — unprobed buckets are never listed, opened, or read.
     """
-    from pgvector_db_spark.functions.vector import l2_norm
-
     dim = len(df.select(vec_col).first()[0])
     planes = hyperplanes(dim, num_bits, seed)
     (
-        df.withColumn("sig", lsh_signature(F.col(vec_col), planes))
+        df.withColumn("sig", lsh_signature(col_sql(vec_col), planes))
         # norm materialized at build (same fold as l2_norm at query time,
         # bitwise-equal distances): probed searches fold each row once
-        .withColumn("_vnorm", l2_norm(F.col(vec_col)))
+        .withColumn("_vnorm", l2_norm(col_sql(vec_col)))
         .repartition("sig")
         .write.mode("overwrite")
         .partitionBy("sig")
@@ -182,13 +187,11 @@ def append_lsh_layout(
     (dim, num_bits, seed) — no stored state — so appended rows compute
     the same signatures as the build and land in the right partitions;
     only the new batch's files are written, existing data untouched."""
-    from pgvector_db_spark.functions.vector import l2_norm
-
     dim = len(df.select(vec_col).first()[0])
     planes = hyperplanes(dim, num_bits, seed)
     (
-        df.withColumn("sig", lsh_signature(F.col(vec_col), planes))
-        .withColumn("_vnorm", l2_norm(F.col(vec_col)))
+        df.withColumn("sig", lsh_signature(col_sql(vec_col), planes))
+        .withColumn("_vnorm", l2_norm(col_sql(vec_col)))
         .repartition("sig")
         .write.mode("append")
         .partitionBy("sig")
@@ -229,9 +232,8 @@ def search_lsh_layout(
     qsig = _signature_of(query_vec, planes)
     probes = _probe_signatures(qsig, num_bits, hamming_probe)
     data = _read_probed_partitions(spark, path, probes).drop("sig")
-    norm_col = "_vnorm" if "_vnorm" in data.columns else None
     return knn(
-        data, query_vec, k, vec_col=vec_col, id_col=id_col, norm_col=norm_col
+        data, query_vec, k, vec_col=vec_col, id_col=id_col, norm_col="_vnorm"
     ).drop("_vnorm")
 
 
@@ -279,14 +281,7 @@ def batch_search_lsh_layout(
     before the query_id shuffle). Returns (query_id, id_col, distance,
     knn_rank).
     """
-    import math
-
     from pyspark.sql.window import Window
-
-    from pgvector_db_spark.functions.vector import (
-        cosine_distance_precomputed,
-        l2_norm,
-    )
 
     if mode == "auto":
         small = queries.limit(driver_batch_max + 1).count() <= driver_batch_max
@@ -297,14 +292,8 @@ def batch_search_lsh_layout(
         dim = len(qrows[0][q_vec_col])
         planes = hyperplanes(dim, num_bits, seed)
 
-        def _qnorm(vec: list[float]) -> float:
-            acc = 0.0
-            for x in vec:  # same sequential fold as l2_norm's aggregate
-                acc += x * x
-            return math.sqrt(acc)
-
         pairs = [
-            (r[q_id_col], sig, qv, _qnorm(qv))
+            (r[q_id_col], sig, qv, fold_norm(qv))
             for r in qrows
             for qv in [[float(x) for x in r[q_vec_col]]]
             for sig in _probe_signatures(
@@ -325,11 +314,11 @@ def batch_search_lsh_layout(
         masks = _hamming_masks(num_bits, hamming_probe)
         q = queries.select(
             F.col(q_id_col).cast("bigint").alias(q_id_col),
-            F.transform(F.col(q_vec_col), lambda x: x.cast("double")).alias(
-                "_qv"
-            ),
-        ).withColumn("_qnorm", l2_norm(F.col("_qv")))
-        qsig = lsh_signature(F.col("_qv"), planes)
+            F.expr(
+                f"transform({col_sql(q_vec_col)}, x -> CAST(x AS DOUBLE))"
+            ).alias("_qv"),
+        ).withColumn("_qnorm", l2_norm("_qv"))
+        qsig = lsh_signature("_qv", planes)
         probe_df = q.select(
             q_id_col,
             F.explode(
@@ -344,12 +333,9 @@ def batch_search_lsh_layout(
         raise ValueError(f"unknown mode: {mode}")
 
     joined = data.join(probe_side, "sig")
-    if "_vnorm" in data.columns:
-        dist = cosine_distance_precomputed(
-            F.col(vec_col), F.col("_qv"), F.col("_vnorm"), F.col("_qnorm")
-        )
-    else:
-        dist = cosine_distance(F.col(vec_col), F.col("_qv"))
+    dist = cosine_distance_precomputed(
+        col_sql(vec_col), "_qv", "_vnorm", "_qnorm"
+    )
     w = Window.partitionBy(q_id_col).orderBy(
         F.col("distance").asc(), F.col(id_col).asc()
     )
@@ -380,7 +366,7 @@ def lsh_ann_knn(
     qsig = _signature_of(query_vec, planes)
     probes = _probe_signatures(qsig, num_bits, hamming_probe)
     cand = (
-        df.withColumn("_sig", lsh_signature(F.col(vec_col), planes))
+        df.withColumn("_sig", lsh_signature(col_sql(vec_col), planes))
         .filter(F.col("_sig").isin(probes))
         .drop("_sig")
     )

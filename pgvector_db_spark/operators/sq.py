@@ -40,6 +40,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pgvector_db_spark.functions.vector import (
+    col_sql,
+    l2_distance,
+    vector_literal_sql,
+)
+
 # clamped to the 0..255 grid: a no-op for the corpus the (vmin, vmax)
 # model was trained on, and the defined drift behavior for rows appended
 # later whose components fall outside the frozen range (the SQ8 analogue
@@ -132,9 +138,7 @@ def search_sq8_layout(
     vmin, vmax = repr(model["vmin"]), repr(model["vmax"])
     data = os.path.join(path, "data")
 
-    qlit = "array({})".format(
-        ", ".join(f"CAST({repr(float(v))} AS DOUBLE)" for v in query_vec)
-    )
+    qlit = vector_literal_sql(query_vec)
     qcode = _CODE.format(v="y", vmin=vmin, vmax=vmax)
     from pgvector_db_spark.operators.layout import read_layout
 
@@ -158,14 +162,13 @@ def search_sq8_layout(
     # rerank: the bounded shortlist broadcasts into a semi-join that
     # reads the float column for shortlist rows only
     full = read_layout(spark, data).select(id_col, vec_col)
-    sq = f"(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)"
-    l2 = (
-        f"sqrt(aggregate(zip_with({vec_col}, {qlit}, (x, y) -> {sq}), "
-        "CAST(0.0 AS DOUBLE), (acc, d) -> acc + d))"
-    )
     return (
         full.join(F.broadcast(adc), id_col)
-        .select(id_col, "dist_sq8", F.expr(l2).alias("distance"))
+        .select(
+            id_col,
+            "dist_sq8",
+            l2_distance(col_sql(vec_col), qlit).alias("distance"),
+        )
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())
         .limit(k_top)
     )

@@ -38,6 +38,8 @@ from pgvector_db_spark.functions.vector import (
     cosine_distance_sql,
     cosine_similarity_sql,
     dot_sql,
+    l1_sql,
+    l2_sql,
     l2sq_sql,
 )
 
@@ -162,6 +164,9 @@ def _atomic_cached_build(path: str, ready: str, build) -> str:
 # in $TMPDIR (no MANIFEST.json, the ready marker) has another name and is
 # rebuilt, never read.
 _IVF_LAYOUT = "mf1"
+# Same idea for the LSH fixture: layouts tagged "vn1" always carry
+# ``_vnorm``, which search_lsh_layout / batch_search_lsh_layout require.
+_LSH_LAYOUT = "vn1"
 
 
 def _ivf_cache(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
@@ -249,7 +254,7 @@ def _lsh_cache(sf_dir: str, emb: DataFrame) -> str:
     from pgvector_db_spark.operators.lsh_ann import build_lsh_layout
 
     path = os.path.join(
-        tempfile.gettempdir(), f"lsh_cache_{_fixture_tag(sf_dir)}"
+        tempfile.gettempdir(), f"lsh_{_LSH_LAYOUT}_cache_{_fixture_tag(sf_dir)}"
     )
     return _atomic_cached_build(
         path, "", lambda p: build_lsh_layout(emb, p, num_bits=6)
@@ -419,24 +424,13 @@ _sql_query(
 )
 
 # pgvector's other distance operators: <-> l2, <#> neg inner product, <+> l1.
-_L2_EXPR_S = (
-    "sqrt(aggregate(zip_with(embedding, qe, (x, y) -> "
-    "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-    "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))"
-)
-_L2_EXPR_D = (
-    "sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform(range(1, len(embedding) + 1), i -> "
-    "(CAST(embedding[i] AS DOUBLE) - CAST(qe[i] AS DOUBLE)) * "
-    "(CAST(embedding[i] AS DOUBLE) - CAST(qe[i] AS DOUBLE)))), (acc, x) -> acc + x))"
-)
 _sql_query(
     "vs_l2_topk",
     f"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id, {_L2_EXPR_S} AS distance FROM embeddings, q
+    SELECT vec_id, {l2_sql("embedding", "qe")} AS distance FROM embeddings, q
     ORDER BY distance ASC, vec_id ASC LIMIT 10""",
     f"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id, {_L2_EXPR_D} AS distance FROM embeddings, q
+    SELECT vec_id, {l2_sql("embedding", "qe", "duckdb")} AS distance FROM embeddings, q
     ORDER BY distance ASC, vec_id ASC LIMIT 10""",
     tags=("vector",),
 )
@@ -452,22 +446,13 @@ _sql_query(
     tags=("vector",),
 )
 
-_L1_EXPR_S = (
-    "aggregate(zip_with(embedding, qe, (x, y) -> "
-    "abs(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-)
-_L1_EXPR_D = (
-    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform(range(1, len(embedding) + 1), i -> "
-    "abs(CAST(embedding[i] AS DOUBLE) - CAST(qe[i] AS DOUBLE)))), (acc, x) -> acc + x)"
-)
 _sql_query(
     "vs_l1_topk",
     f"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id, {_L1_EXPR_S} AS distance FROM embeddings, q
+    SELECT vec_id, {l1_sql("embedding", "qe")} AS distance FROM embeddings, q
     ORDER BY distance ASC, vec_id ASC LIMIT 10""",
     f"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id, {_L1_EXPR_D} AS distance FROM embeddings, q
+    SELECT vec_id, {l1_sql("embedding", "qe", "duckdb")} AS distance FROM embeddings, q
     ORDER BY distance ASC, vec_id ASC LIMIT 10""",
     tags=("vector",),
 )
@@ -2891,7 +2876,7 @@ def _vs_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pgvector_db_spark.functions.vector import (
         cosine_distance,
-        vector_literal,
+        vector_literal_sql,
     )
     from pgvector_db_spark.operators.ivf import IVFIndex
 
@@ -2902,7 +2887,7 @@ def _vs_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = idx.search(list(q), k=10, nprobe=2)
     exact = t["embeddings"].select(
         "vec_id",
-        cosine_distance(F.col("embedding"), vector_literal(list(q))).alias(
+        cosine_distance("embedding", vector_literal_sql(list(q))).alias(
             "distance"
         ),
     )
@@ -3498,7 +3483,7 @@ def _vs_ivf_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pgvector_db_spark.functions.vector import (
         cosine_distance,
-        vector_literal,
+        vector_literal_sql,
     )
     from pgvector_db_spark.operators.ivf import IVFIndex
 
@@ -3513,7 +3498,7 @@ def _vs_ivf_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             cosine_distance(
-                F.col("embedding"), vector_literal(list(q))
+                "embedding", vector_literal_sql(list(q))
             ).alias("distance"),
         )
     )
@@ -3570,7 +3555,7 @@ def vs_ivf_knn_filtered_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame
     "vs_ivf_knn_l2_fullprobe",
     f"""
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id, label, {_L2_EXPR_D} AS distance
+    SELECT vec_id, label, {l2_sql("embedding", "qe", "duckdb")} AS distance
     FROM embeddings, q
     ORDER BY distance ASC, vec_id ASC LIMIT 10
     """,
@@ -3630,7 +3615,10 @@ def vs_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully oracle-checkable because every fold order is pinned (sequential
     dot, order-free max, array-order outer sum). TakeOrderedAndProject
     top-10."""
-    from pgvector_db_spark.functions.vector import chunk_vector, maxsim_score
+    from pgvector_db_spark.functions.vector import (
+        chunk_vector_sql,
+        maxsim_score,
+    )
 
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
@@ -3638,8 +3626,7 @@ def vs_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = emb.crossJoin(F.broadcast(q)).withColumn(
         "maxsim",
         maxsim_score(
-            chunk_vector(F.col("embedding"), 8, 8),
-            chunk_vector(F.col("qe"), 8, 8),
+            chunk_vector_sql("embedding", 8, 8), chunk_vector_sql("qe", 8, 8)
         ),
     )
     return (
@@ -3849,7 +3836,7 @@ def _vs_lsh_ann_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     num_bits=6, hamming_probe=2 across sf0.001–0.1."""
     from pgvector_db_spark.functions.vector import (
         cosine_distance,
-        vector_literal,
+        vector_literal_sql,
     )
     from pgvector_db_spark.operators.lsh_ann import lsh_ann_knn
 
@@ -3860,7 +3847,7 @@ def _vs_lsh_ann_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact = t["embeddings"].select(
         "vec_id",
-        cosine_distance(F.col("embedding"), vector_literal(list(q))).alias(
+        cosine_distance("embedding", vector_literal_sql(list(q))).alias(
             "distance"
         ),
     )
@@ -9066,7 +9053,7 @@ def _vs_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.select("vec_id", "embedding")
         .crossJoin(F.broadcast(q))
-        .selectExpr("vec_id", f"{_L2_EXPR_S} AS distance")
+        .selectExpr("vec_id", l2_sql("embedding", "qe") + " AS distance")
         .orderBy(F.col("distance").asc(), F.col("vec_id").asc())
         .limit(10)
     )
@@ -9076,7 +9063,7 @@ REGISTRY["vs_pq_rerank"] = QuerySpec(
     "vs_pq_rerank",
     _vs_pq_rerank,
     f"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id, {_L2_EXPR_D} AS distance FROM embeddings, q
+    SELECT vec_id, {l2_sql("embedding", "qe", "duckdb")} AS distance FROM embeddings, q
     ORDER BY distance ASC, vec_id ASC LIMIT 10""",
     tags=("vector", "pq", "ann", "quantization"),
 )
@@ -9097,7 +9084,7 @@ def _vs_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = pq_search(encode_pq(emb, model), model, qvec, 10)
     q = emb.filter("vec_id = 0").select(F.col("embedding").alias("qe"))
     exact = emb.crossJoin(F.broadcast(q)).selectExpr(
-        "vec_id", f"{_L2_EXPR_S} AS distance"
+        "vec_id", l2_sql("embedding", "qe") + " AS distance"
     )
     return _ann_probe_audit(
         probe,
@@ -9112,7 +9099,7 @@ def _vs_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 REGISTRY["vs_pq_adc_topk"] = QuerySpec(
     "vs_pq_adc_topk",
     _vs_pq_adc_topk,
-    _ann_audit_oracle(10, _L2_EXPR_D, check_dist=False),
+    _ann_audit_oracle(10, l2_sql("embedding", "qe", "duckdb"), check_dist=False),
     tags=("vector", "pq", "ann"),
 )
 
@@ -9157,7 +9144,7 @@ def _vs_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = emb.filter("vec_id = 0").select(F.col("embedding").alias("qe"))
     exact = emb.crossJoin(F.broadcast(q)).selectExpr(
-        "vec_id", f"{_L2_EXPR_S} AS distance"
+        "vec_id", l2_sql("embedding", "qe") + " AS distance"
     )
     return _ann_probe_audit(probe, exact, k=10, recall_floor=4)
 
@@ -9165,7 +9152,7 @@ def _vs_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 REGISTRY["vs_ivfpq_knn"] = QuerySpec(
     "vs_ivfpq_knn",
     _vs_ivfpq_knn,
-    _ann_audit_oracle(10, _L2_EXPR_D),
+    _ann_audit_oracle(10, l2_sql("embedding", "qe", "duckdb")),
     tags=("vector", "pq", "A9", "ann"),
 )
 
@@ -9189,7 +9176,7 @@ REGISTRY["vs_ivfpq_knn_fullprobe"] = QuerySpec(
     "vs_ivfpq_knn_fullprobe",
     _vs_ivfpq_knn_fullprobe,
     f"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id, {_L2_EXPR_D} AS distance FROM embeddings, q
+    SELECT vec_id, {l2_sql("embedding", "qe", "duckdb")} AS distance FROM embeddings, q
     ORDER BY distance ASC, vec_id ASC LIMIT 10""",
     tags=("vector", "pq", "A9", "ann"),
 )
@@ -9242,7 +9229,7 @@ _SQ8_DIST_D = (
     ),
     q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
     s AS (
-      SELECT vec_id, {_SQ8_DIST_D} AS dist_sq8, {_L2_EXPR_D} AS distance
+      SELECT vec_id, {_SQ8_DIST_D} AS dist_sq8, {l2_sql("embedding", "qe", "duckdb")} AS distance
       FROM embeddings, stats, q
     ),
     short AS (
@@ -9274,7 +9261,7 @@ def vs_sq8_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "vec_id",
             f"{_SQ8_DIST_S} AS dist_sq8",
-            f"{_L2_EXPR_S} AS distance",
+            l2_sql("embedding", "qe") + " AS distance",
         )
     )
     short = scored.orderBy(
@@ -9295,7 +9282,7 @@ def vs_sq8_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
     s AS (
-      SELECT vec_id, {_SQ8_DIST_D} AS dist_sq8, {_L2_EXPR_D} AS distance
+      SELECT vec_id, {_SQ8_DIST_D} AS dist_sq8, {l2_sql("embedding", "qe", "duckdb")} AS distance
       FROM embeddings, stats, q
     ),
     short AS (
@@ -9357,7 +9344,7 @@ _SQ8C_Y = _SQ8C.format(v="qe[i]")
              CAST(list_sum(list_transform(range(1, len(embedding) + 1),
                i -> ({_SQ8C_X} - {_SQ8C_Y}) * ({_SQ8C_X} - {_SQ8C_Y})))
                AS BIGINT) AS dist_sq8,
-             {_L2_EXPR_D} AS distance
+             {l2_sql("embedding", "qe", "duckdb")} AS distance
       FROM embeddings, stats, q
     ),
     short AS (

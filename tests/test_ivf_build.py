@@ -127,7 +127,7 @@ def test_assignment_matches_cosine_distance_argmin(spark, tables, tmp_path):
     scored = emb.crossJoin(F.broadcast(c)).select(
         "vec_id",
         F.struct(
-            cosine_distance(F.col("embedding"), F.col("centroid")),
+            cosine_distance("embedding", "centroid"),
             F.col("list_id"),
         ).alias("s"),
     )

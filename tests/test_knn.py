@@ -94,7 +94,7 @@ def test_lsh_signature_matches_driver_side(tables):
     emb = tables["embeddings"].limit(20)
     planes = hyperplanes(64, 6)
     got = emb.select(
-        "vec_id", lsh_signature(F.col("embedding"), planes).alias("sig")
+        "vec_id", lsh_signature("embedding", planes).alias("sig")
     ).collect()
     for r in got:
         vec = list(
@@ -176,7 +176,7 @@ def test_similarity_join_subset_and_recall(spark, tables):
     exact = (
         a.crossJoin(b)
         .filter(F.col("ida") < F.col("idb"))
-        .withColumn("s", cosine_similarity(F.col("va"), F.col("vb")))
+        .withColumn("s", cosine_similarity("va", "vb"))
     )
     sims = sorted((r["s"] for r in exact.select("s").collect()), reverse=True)
     thr = sims[19]
@@ -327,3 +327,62 @@ def test_kcenter_coreset_matches_pure_python(spark):
     # coreset radii are non-increasing (greedy k-center invariant)
     radii = [r for _, _, r in got[1:]]
     assert radii == sorted(radii, reverse=True)
+
+
+def test_knn_plan_round_trips_do_not_grow_with_dim(spark, monkeypatch):
+    """Building ``knn``'s plan costs the same number of JVM round trips
+    at 4 and at 768 dimensions: the query rides in as one SQL literal,
+    not one ``F.lit`` call per element."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(command, *args, **kwargs):
+        # py4j also releases Java objects whose Python proxies died,
+        # whenever the collector frees them: bookkeeping, not planning
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls[0] += 1
+        return send(command, *args, **kwargs)
+
+    frames = {
+        d: spark.createDataFrame(
+            [(0, [1.0] * d)], "vec_id bigint, embedding array<double>"
+        )
+        for d in (4, 768)
+    }
+    knn(frames[4], [0.5] * 4, 3)  # warm any first-use lookups
+    counts = {}
+    monkeypatch.setattr(client, "send_command", counting)
+    for d, df in frames.items():
+        calls[0] = 0
+        knn(df, [0.5] * d, 3)
+        counts[d] = calls[0]
+    monkeypatch.undo()
+    assert counts[4] == counts[768] < 100, counts
+
+
+def test_knn_and_cosine_distance_quote_column_names(tables):
+    """A vector column whose name holds a space ranks exactly like the
+    same column under a plain name (col_sql backtick-quotes it)."""
+    from pgvector_db_spark.functions.vector import (
+        col_sql,
+        cosine_distance,
+        vector_literal_sql,
+    )
+
+    emb = tables["embeddings"].select("vec_id", "embedding")
+    spaced = emb.withColumnRenamed("embedding", "my vec")
+    q = list(emb.filter("vec_id = 0").first()["embedding"])
+
+    def rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    assert rows(knn(spaced, q, 10, vec_col="my vec").drop("my vec")) == rows(
+        knn(emb, q, 10).drop("embedding")
+    )
+    lit = vector_literal_sql(q)
+    assert sorted(
+        rows(spaced.select("vec_id", cosine_distance(col_sql("my vec"), lit)))
+    ) == sorted(rows(emb.select("vec_id", cosine_distance("embedding", lit))))

@@ -677,7 +677,8 @@ def test_cc_round_single_join_single_shuffle(spark, tables):
     )
     assert n_joins == 1, plan
     shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert shuffles <= 2, plan  # join-key exchanges only; no extra pass
+    # the labels side broadcasts, so the aggregate's exchange is the only one
+    assert shuffles == 1, plan
 
 
 def test_pagerank_bucketed_iteration_no_shuffle(spark, tables, tmp_path):

@@ -16,6 +16,7 @@ from pgvector_db_spark.functions.vector import (
     cosine_distance,
     l1_distance,
     l2_distance,
+    vector_literal_sql,
 )
 
 finite = st.floats(
@@ -33,8 +34,8 @@ def _one(spark, cols):
 @settings(max_examples=10, deadline=None)
 @given(a=vec, b=vec, scale=st.floats(min_value=0.1, max_value=50))
 def test_cosine_properties(spark, a, b, scale):
-    la, lb = F.array(*map(F.lit, a)), F.array(*map(F.lit, b))
-    ls = F.array(*[F.lit(x * scale) for x in b])
+    la, lb = vector_literal_sql(a), vector_literal_sql(b)
+    ls = vector_literal_sql([x * scale for x in b])
     r = _one(
         spark,
         [
@@ -51,7 +52,7 @@ def test_cosine_properties(spark, a, b, scale):
 @settings(max_examples=10, deadline=None)
 @given(a=vec, b=vec, c=vec)
 def test_lp_distance_properties(spark, a, b, c):
-    la, lb, lc = (F.array(*map(F.lit, v)) for v in (a, b, c))
+    la, lb, lc = (vector_literal_sql(v) for v in (a, b, c))
     r = _one(
         spark,
         [
@@ -69,35 +70,93 @@ def test_lp_distance_properties(spark, a, b, c):
     assert abs(r["ab1"] - want1) < 1e-6 * (1 + want1)
 
 
+def _assert_one_definition(spark, a, b, n_chunks, chunk_dim):
+    """Every generator, rendered three ways, gives the same float64 bits:
+    the Column API (``F.expr`` of the Spark dialect) equals DuckDB
+    evaluating the ``duckdb`` dialect, and the registered SQL function
+    (functions/sql_registry.py) equals the Column API on the function's
+    declared ARRAY<FLOAT> input. maxsim has no registered SQL function."""
+    import duckdb
+
+    from pgvector_db_spark.functions import vector as V
+    from pgvector_db_spark.functions.sql_registry import register_sql_functions
+
+    register_sql_functions(spark)
+    cases = [  # (name, Column builder, registered function, generator, arity)
+        ("dot", V.dot_product, "dot_product", V.dot_sql, 2),
+        ("norm", V.l2_norm, "vector_norm", V.norm_sql, 1),
+        ("cos_sim", V.cosine_similarity, "cosine_similarity",
+         V.cosine_similarity_sql, 2),
+        ("cos", V.cosine_distance, "cosine_distance", V.cosine_distance_sql, 2),
+        ("l2", V.l2_distance, "l2_distance", V.l2_sql, 2),
+        ("ip", V.inner_product_distance, "inner_product_distance", V.ip_sql, 2),
+        ("l1", V.l1_distance, "l1_distance", V.l1_sql, 2),
+        ("l2_normalize", V.l2_normalize, "l2_normalize", V.l2_normalize_sql, 1),
+    ]
+    # a and b are columns of a one-row relation, as in the registry queries
+    spark_src = f"SELECT {vector_literal_sql(a)} AS a, {vector_literal_sql(b)} AS b"
+    duck_src = (
+        f"(SELECT {vector_literal_sql(a, 'duckdb')} AS a, "
+        f"{vector_literal_sql(b, 'duckdb')} AS b) t"
+    )
+    args = ("a", "b")
+    as_float = ("CAST(a AS ARRAY<FLOAT>)", "CAST(b AS ARRAY<FLOAT>)")
+
+    col = spark.sql(spark_src).select(
+        *[fn(*args[:n]).alias(name) for name, fn, _, _, n in cases],
+        *[fn(*as_float[:n]).alias(f"{name}_f") for name, fn, _, _, n in cases],
+        V.maxsim_score(
+            V.chunk_vector_sql("a", n_chunks, chunk_dim),
+            V.chunk_vector_sql("b", n_chunks, chunk_dim),
+        ).alias("maxsim"),
+    ).first()
+    reg = spark.sql(
+        "SELECT "
+        + ", ".join(
+            f"{udf}({', '.join(as_float[:n])}) AS {name}"
+            for name, _, udf, _, n in cases
+        )
+        + f" FROM ({spark_src})"
+    ).first()
+    duck_maxsim = V.maxsim_sql(
+        V.chunk_vector_sql("a", n_chunks, chunk_dim, "duckdb"),
+        V.chunk_vector_sql("b", n_chunks, chunk_dim, "duckdb"),
+        "duckdb",
+    )
+    duck = duckdb.sql(
+        "SELECT "
+        + ", ".join(
+            f"{gen(*args[:n], 'duckdb')} AS {name}"
+            for name, _, _, gen, n in cases
+        )
+        + f", {duck_maxsim} AS maxsim FROM {duck_src}"
+    ).fetchone()
+    for i, (name, *_rest) in enumerate(cases):
+        # exact, no tolerance
+        assert col[name] == duck[i], name
+        assert col[f"{name}_f"] == reg[name], name
+    assert col["maxsim"] == duck[-1], "maxsim"
+
+
 @settings(max_examples=10, deadline=None)
 @given(a=vec, b=vec)
 def test_cosine_fold_bitwise_matches_duckdb(spark, a, b):
-    """The determinism contract itself, fuzzed: the dual-dialect SQL
-    generators must produce BIT-IDENTICAL float64 cosine distances on
-    arbitrary finite vectors — not approximately equal, equal. This is
-    what the driver's value-hash gate assumes on every vector query."""
-    import duckdb
+    """The determinism contract itself, fuzzed: each dual-dialect SQL
+    generator produces BIT-IDENTICAL float64 results through the Column
+    API, the registered SQL function and DuckDB, on arbitrary finite
+    vectors — not approximately equal, equal. This is what the driver's
+    value-hash gate assumes on every vector query."""
+    _assert_one_definition(spark, a, b, n_chunks=2, chunk_dim=2)
 
-    from pgvector_db_spark.functions.vector import (
-        cosine_distance_sql,
-        vector_literal_sql,
-    )
 
-    got_spark = spark.sql(
-        "SELECT "
-        + cosine_distance_sql(
-            vector_literal_sql(a, "spark"), vector_literal_sql(b, "spark"), "spark"
-        )
-        + " AS v"
-    ).first()["v"]
-    got_duck = duckdb.sql(
-        "SELECT "
-        + cosine_distance_sql(
-            vector_literal_sql(a, "duckdb"), vector_literal_sql(b, "duckdb"), "duckdb"
-        )
-        + " AS v"
-    ).fetchone()[0]
-    assert got_spark == got_duck  # exact, no tolerance
+def test_one_definition_bitwise_768d(spark):
+    """The same three-way bitwise equality at a real embedding width
+    (768-d, MaxSim over 12 chunks of 64)."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    a, b = ([float(x) for x in rng.standard_normal(768)] for _ in range(2))
+    _assert_one_definition(spark, a, b, n_chunks=12, chunk_dim=64)
 
 
 @settings(max_examples=10, deadline=None)
@@ -166,11 +225,13 @@ def test_partitioning_invariance(spark, tables):
     makes the differential oracle meaningful on a 1000-executor cluster:
     decimal-exact aggregation and fold-exact distances produce bitwise
     identical values whether the data lives in 1 partition or 17."""
-    from pgvector_db_spark.functions.vector import cosine_distance, vector_literal
+    from pgvector_db_spark.functions.vector import cosine_distance
     from pyspark.sql import functions as F
 
     emb = tables["embeddings"]
-    q = vector_literal([float(v) for v in emb.filter("vec_id = 0").first()["embedding"]])
+    q = vector_literal_sql(
+        [float(v) for v in emb.filter("vec_id = 0").first()["embedding"]]
+    )
     li = tables["lineitem"]
 
     def knn_vals(df):
@@ -208,12 +269,16 @@ def test_maxsim_matches_python_reference(spark, d, q):
     """maxsim_score over 2 chunks of 4 dims equals the plain-Python
     fold (sequential dots, max, ordered sum) bitwise — the invariant the
     vs_maxsim_topk oracle depends on."""
-    from pgvector_db_spark.functions.vector import chunk_vector, maxsim_score
+    from pgvector_db_spark.functions.vector import chunk_vector_sql, maxsim_score
 
-    ld, lq = (F.array(*map(F.lit, v)) for v in (d, q))
+    ld, lq = (vector_literal_sql(v) for v in (d, q))
     got = _one(
         spark,
-        [maxsim_score(chunk_vector(ld, 2, 4), chunk_vector(lq, 2, 4)).alias("s")],
+        [
+            maxsim_score(
+                chunk_vector_sql(ld, 2, 4), chunk_vector_sql(lq, 2, 4)
+            ).alias("s")
+        ],
     )["s"]
 
     def dot(x, y):
