@@ -667,9 +667,8 @@ def ngram_jaccard_pairs(
     Returns (id_a, id_b, jaccard_sim) with id_a < id_b and
     jaccard_sim >= threshold.
     """
-    base, cand, n_docs, _ = _ngram_candidate_pairs(
-        df, text_col, id_col, n, max_df
-    )
+    base, cand = _ngram_candidate_pairs(df, text_col, id_col, n, max_df)
+    base.count()  # materialize the persisted gram table
     # no broadcast hint here: the max_df stop-gram cap bounds the
     # candidate set, and for a small pair frame the two gram-table
     # broadcast builds cost more than the shuffle they replace
@@ -725,17 +724,19 @@ def _ngram_candidate_pairs(
 ):
     """Shared inverted-index candidate generation for the n-gram pair
     scorers (Jaccard / containment): rare-gram postings self-join, so
-    only documents sharing >=1 sub-max_df gram ever meet."""
+    only documents sharing >=1 sub-max_df gram ever meet. Returns the
+    persisted per-doc gram table, which the caller materializes with the
+    one pass it needs (a count, or :func:`_base_stats`), and the
+    candidate pairs."""
     # spread the n-gram extraction across cores (single-file inputs
     # scan as one partition; no-op at scale)
     base = ensure_min_parallelism(df).select(
         F.col(id_col), _word_ngrams(text_col, n).alias("_ng")
     )
     # reused by the posting explode (twice, via the self-join) and both
-    # verification joins — persist + eager materialize so parallel first
-    # stages don't race-recompute the n-gram arrays
+    # verification joins — persist (the caller materializes it eagerly)
+    # so parallel first stages don't race-recompute the n-gram arrays
     base = base.persist()
-    n_docs, est_bytes = _base_stats(base)
     posting = base.select(F.col(id_col), F.explode("_ng").alias("_g"))
     rare = (
         posting.groupBy("_g").count().filter(F.col("count") <= max_df).drop("count")
@@ -750,7 +751,7 @@ def _ngram_candidate_pairs(
         )
         .distinct()
     )
-    return base, cand, n_docs, est_bytes
+    return base, cand
 
 
 def _materialize_and_release(out: DataFrame, base: DataFrame) -> DataFrame:
@@ -965,9 +966,8 @@ def ngram_containment_pairs(
     document's extra grams (the asymmetric-duplication case in crawl
     corpora). Same candidate machinery and shuffle bounds as
     :func:`ngram_jaccard_pairs`."""
-    base, cand, n_docs, est_bytes = _ngram_candidate_pairs(
-        df, text_col, id_col, n, max_df
-    )
+    base, cand = _ngram_candidate_pairs(df, text_col, id_col, n, max_df)
+    n_docs, est_bytes = _base_stats(base)
     inter = F.size(F.array_intersect(F.col("_nga"), F.col("_ngb"))).cast(
         "double"
     )

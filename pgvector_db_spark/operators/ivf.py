@@ -18,9 +18,17 @@ time. The Spark-native re-expression:
             version too; readers read the manifest once per call and
             reload centers and layout schema only when the version moves.
   search: rank centroids against the query driver-side (lists ≤ a few
-          thousand floats — trivially small), then scan ONLY the top
-          ``nprobe`` partitions (Catalyst partition pruning on
-          ``list_id IN (...)``) and run the exact top-k kernel within.
+          thousand floats — trivially small), then score ONLY the top
+          ``nprobe`` lists exactly. Each list is read once per index
+          version with pyarrow into a float64 matrix held on the driver,
+          and scored with the fold the SQL generators write, in the same
+          order, so distances and the (distance, id) order are bitwise
+          the Spark kernel's; the top-k rows return as a LocalRelation,
+          and a query starts no Spark job. Off a local filesystem, or
+          past ``_RESIDENT_MAX_BYTES`` of resident lists, Spark reads
+          only the probed ``list_id=`` directories and runs the exact
+          top-k kernel within. ``search_filtered`` and ``batch_search``
+          always run on Spark.
 
 Scale: the expensive build is one bounded sample collect + one
 assignment pass + one partitioned write; a search touches nprobe/lists
@@ -32,11 +40,14 @@ Recall/latency tradeoff is exactly pgvector's ``nprobe`` semantics; with
 
 from __future__ import annotations
 
-import math
 import os
 import uuid
 from typing import NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -57,6 +68,16 @@ from pgvector_db_spark.utils import local_relation_df, local_rows_df
 MANIFEST = "MANIFEST.json"
 
 
+class _List(NamedTuple):
+    """One list of an index version, held on the driver for serving."""
+
+    rows: pa.Table  # the list's layout rows as stored (no list_id)
+    xt: np.ndarray  # float64 dim × n, C-contiguous: one row per dimension
+    ids: np.ndarray
+    vnorm: np.ndarray
+    nulls: np.ndarray  # bool: the rows holding a null element
+
+
 class _Version(NamedTuple):
     """What readers need of one committed index version."""
 
@@ -64,12 +85,22 @@ class _Version(NamedTuple):
     metric: str
     centers: list[tuple[int, list[float], float]]  # (list_id, centroid, norm)
     schema: StructType  # of the data layout
+    center_xt: np.ndarray  # float64 dim × lists, columns in ``centers`` order
+    lists: dict[int, _List]  # loaded by search() on first probe
 
 
 # One entry per index path, replaced as soon as the manifest names another
 # version (a build, an append, or an index renamed into place), so no
-# handle, session or process ever ranks with another version's centers.
+# handle, session or process ever ranks with another version's centers,
+# and the lists loaded under an old version go with it.
 _VERSIONS: dict[str, _Version] = {}
+
+# Driver memory the serving tier may hold per index version: the float64
+# matrices of the lists ``search`` has loaded (8 bytes × dim × rows; the
+# Arrow rows beside them add about half that again for float32 vectors,
+# plus the payload). A search whose probed lists would pass it is served
+# by Spark instead: 256 MB holds 500k 64-d or 43k 768-d rows.
+_RESIDENT_MAX_BYTES = 256 << 20
 
 
 def _commit_version(path: str, metric: str) -> None:
@@ -197,7 +228,11 @@ class IVFIndex:
                 for r in self.spark.read.parquet(self.centroids_path).collect()
             )
             schema = self.spark.read.parquet(self.data_path).schema
-            v = _Version(m["version"], m["metric"], centers, schema)
+            dim = len(centers[0][1]) if centers else 0
+            center_xt = np.array(
+                [c for _, c, _ in centers], dtype=np.float64
+            ).reshape(len(centers), dim).T.copy()
+            v = _Version(m["version"], m["metric"], centers, schema, center_xt, {})
             _VERSIONS[self.path] = v
         return v
 
@@ -213,24 +248,24 @@ class IVFIndex:
         self, query_vec: list[float], v: _Version | None = None
     ) -> list[tuple[int, float]]:
         """Centroid ranking under the index's metric — the same argmin
-        pgvector runs over list centers for the chosen operator class."""
+        pgvector runs over list centers for the chosen operator class —
+        ordered by (distance, list_id). A center or query of zero norm is
+        at cosine distance 1.0. Like ``zip``, a query of another dim is
+        folded over the shorter length; scoring then rejects it."""
         v = v or self._load()
-        ranked = []
+        q = np.array([float(x) for x in query_vec], dtype=np.float64)
+        n = min(len(q), v.center_xt.shape[0])
+        dist = _fold_distances(v.center_xt[:n], q[:n], v.metric)
         if v.metric == "cosine":
-            qn = math.sqrt(sum(x * x for x in query_vec))
-            for lid, c, cn in v.centers:
-                dot = sum(x * y for x, y in zip(query_vec, c))
-                dist = 1.0 - dot / (qn * cn) if qn and cn else 1.0
-                ranked.append((lid, dist))
-        elif v.metric == "l2":
-            for lid, c, _ in v.centers:
-                dist = math.sqrt(sum((x - y) ** 2 for x, y in zip(query_vec, c)))
-                ranked.append((lid, dist))
-        else:  # ip: rank by negative inner product (pgvector <#>)
-            for lid, c, _ in v.centers:
-                ranked.append((lid, -sum(x * y for x, y in zip(query_vec, c))))
-        ranked.sort(key=lambda t: (t[1], t[0]))
-        return ranked
+            qn = fold_norm(query_vec)
+            cn = np.array([cn for _, _, cn in v.centers])
+            with np.errstate(divide="ignore", invalid="ignore"):
+                dist = 1.0 - dist / (qn * cn)
+            dist[(cn == 0.0) | (qn == 0.0)] = 1.0
+        lids = np.array([lid for lid, _, _ in v.centers])
+        return [
+            (int(lids[i]), float(dist[i])) for i in np.lexsort((lids, dist))
+        ]
 
     def _data(self, v: _Version | None = None) -> DataFrame:
         """The whole layout, read with the version's schema (no footer
@@ -262,14 +297,106 @@ class IVFIndex:
     ) -> DataFrame:
         """ANN top-k: probe the ``nprobe`` nearest lists only.
 
-        The scan reads only the probed ``list_id=`` partition
-        directories (direct partition-path read, the static-pruning
-        fast path); unprobed data is never read, and non-probed
-        partitions are not even listed.
+        The probed lists are scored on the driver, from numpy matrices
+        loaded once per index version (:meth:`_resident`), with the fold
+        the SQL generators write, in the same order: distances and the
+        (distance, id) order are bitwise those of the Spark kernel. The
+        top-k rows come back as a ``LocalRelation``, so neither this
+        call nor the caller's collect starts a Spark job, and unprobed
+        lists are never read. A query whose dim differs from the
+        index's, or a zero-norm query under cosine, raises here, with
+        the ``knn`` guard's text or ``DIVIDE_BY_ZERO``, rather than at
+        collect.
+
+        Off a local filesystem, or when loading the probed lists would
+        pass ``_RESIDENT_MAX_BYTES``, the same rows come from the Spark
+        kernel over only the probed ``list_id=`` directories.
         """
         v = self._load()
         probes = [lid for lid, _ in self._rank_lists(query_vec, v)[:nprobe]]
-        return self._knn(self._probed_data(probes, v), query_vec, k, v)
+        lists = self._resident(probes, v)
+        if lists is None:
+            return self._knn(self._probed_data(probes, v), query_vec, k, v)
+        return self._score_resident(lists, query_vec, k, v)
+
+    def _resident(
+        self, probes: list[int], v: _Version
+    ) -> dict[int, _List] | None:
+        """The probed lists' rows and matrices, each read with pyarrow on
+        its first probe under ``v``; None when the layout is not a local
+        directory or the new lists would pass the budget."""
+        if not os.path.isdir(self.data_path):
+            return None
+        files = {
+            lid: _list_files(self.data_path, lid)
+            for lid in probes if lid not in v.lists
+        }
+        if files:
+            dim = v.center_xt.shape[0]
+            held = sum(lst.xt.nbytes for lst in v.lists.values())
+            rows = sum(
+                pq.read_metadata(f).num_rows for fs in files.values() for f in fs
+            )
+            if held + 8 * dim * rows > _RESIDENT_MAX_BYTES:
+                return None
+            names = [f.name for f in v.schema.fields if f.name != "list_id"]
+            for lid, fs in files.items():
+                v.lists[lid] = _load_list(fs, names, self.vec_col, self.id_col)
+        return {lid: v.lists[lid] for lid in probes}
+
+    def _score_resident(
+        self, lists: dict[int, _List], query_vec: list[float], k: int,
+        v: _Version,
+    ) -> DataFrame:
+        """``_knn(_probed_data(...))`` evaluated on the driver."""
+        q = np.array([float(x) for x in query_vec], dtype=np.float64)
+        lists = {lid: lst for lid, lst in lists.items() if lst.ids.size}
+        for lst in lists.values():
+            if lst.xt.shape[0] != len(q):
+                raise ValueError(
+                    f"knn: query vector dim {len(q)} != {self.vec_col} dim "
+                    f"{lst.xt.shape[0]}"
+                )
+        qn = fold_norm(query_vec)
+        parts = []
+        for lst in lists.values():
+            dist = _fold_distances(lst.xt, q, v.metric)
+            if v.metric == "cosine":
+                denom = lst.vnorm * qn
+                if (denom == 0.0).any():
+                    raise ZeroDivisionError(
+                        "[DIVIDE_BY_ZERO] Division by zero: cosine distance "
+                        "of a zero-norm query"
+                    )
+                dist = 1.0 - dist / denom
+            parts.append(dist)
+        schema = StructType(
+            [f for f in v.schema.fields if f.name != "_vnorm"]
+        ).add("distance", "double").add("similarity", "double")
+        if not parts:
+            return local_relation_df(self.spark, [], schema)
+        dist = np.concatenate(parts)
+        ids = np.concatenate([lst.ids for lst in lists.values()])
+        nulls = np.concatenate([lst.nulls for lst in lists.values()])
+        # Spark orders ascending with nulls first: a row holding a null
+        # element has a null distance
+        order = np.lexsort((ids, dist, ~nulls))[:k]
+        lid_col = np.repeat(
+            np.array(list(lists), dtype=np.int32),
+            [lst.ids.size for lst in lists.values()],
+        )
+        top = pa.concat_tables(
+            [lst.rows for lst in lists.values()], promote_options="default"
+        ).take(order).drop_columns(["_vnorm"])
+        d, null = dist[order], nulls[order]
+        sim = 1.0 - d if v.metric == "cosine" else -d
+        out = (
+            top.append_column("list_id", pa.array(lid_col[order]))
+            .append_column("distance", pa.array(d, mask=null))
+            .append_column("similarity", pa.array(sim, mask=null))
+            .select(schema.fieldNames())
+        )
+        return local_relation_df(self.spark, out, schema)
 
     def _knn(
         self, data: DataFrame, query_vec: list[float], k: int, v: _Version
@@ -804,6 +931,68 @@ def deterministic_sample_centroids(
         x = x / norms
     rng = np.random.RandomState(seed)
     return [[float(v) for v in c] for c in _kmeans(x, lists, 10, rng)]
+
+
+def _fold_distances(xt: np.ndarray, q: np.ndarray, metric: str) -> np.ndarray:
+    """The distances the SQL generators fold, for every column of ``xt``
+    (float64, dim × n) against ``q``, one dimension at a time in the
+    same order, so each float64 product and sum is the one Spark makes:
+    l2 is ``sqrt(Σ d*d)``, ip ``-Σ x*q``, and cosine the raw ``Σ x*q``,
+    which the caller divides by its norms."""
+    acc = np.zeros(xt.shape[1])
+    if metric == "l2":
+        for j in range(len(q)):
+            d = xt[j] - q[j]
+            acc = acc + d * d
+        return np.sqrt(acc)
+    for j in range(len(q)):
+        acc = acc + xt[j] * q[j]
+    return -acc if metric == "ip" else acc
+
+
+def _list_files(data_path: str, lid: int) -> list[str]:
+    """The parquet files of one list: what Spark reads under
+    ``list_id=<lid>/``, skipping names that start with ``_`` or ``.``."""
+    d = os.path.join(data_path, f"list_id={lid}")
+    if not os.path.isdir(d):
+        return []
+    return [
+        os.path.join(d, f) for f in sorted(os.listdir(d))
+        if not f.startswith(("_", "."))
+    ]
+
+
+def _load_list(
+    files: list[str], names: list[str], vec_col: str, id_col: str
+) -> _List:
+    """One list's rows with pyarrow, and its vectors as a float64
+    matrix, widened from float32 before any arithmetic."""
+    # files written by build and by appends may differ in nullability
+    rows = (
+        pa.concat_tables(
+            [pq.read_table(f) for f in files], promote_options="default"
+        ).select(names).combine_chunks()
+        if files else pa.schema([]).empty_table()
+    )
+    if not rows.num_rows:
+        return _List(
+            rows, np.zeros((0, 0)), np.zeros(0), np.zeros(0), np.zeros(0, bool)
+        )
+    vec = rows.column(vec_col).combine_chunks()
+    n, values = len(vec), vec.flatten()
+    dim = len(values) // n
+    if pc.any(pc.not_equal(pc.list_value_length(vec), dim)).as_py():
+        raise ValueError(f"ivf: {vec_col} of one list holds several dims")
+    xt = np.ascontiguousarray(
+        values.to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, dim).T
+    )
+    nulls = values.is_null().to_numpy(zero_copy_only=False)
+    return _List(
+        rows, xt,
+        rows.column(id_col).to_numpy(),
+        rows.column("_vnorm").to_numpy(),
+        nulls.reshape(n, dim).any(axis=1),
+    )
 
 
 def _assign_lists(

@@ -41,6 +41,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
+from pgvector_db_spark.functions.vector import col_sql, l2_sql, vector_literal_sql
+
 
 @dataclass
 class PQModel:
@@ -145,15 +147,14 @@ def adc_lut(model: PQModel, query_vec: list[float]) -> list[float]:
 
 
 def adc_distance(model: PQModel, query_vec: list[float], codes_col: str = "codes") -> Column:
-    """Pure-codegen ADC distance: m literal-array lookups + a fold."""
-    lut = F.array(*[F.lit(v) for v in adc_lut(model, query_vec)])
-    k = model.k
-    looked = F.zip_with(
-        F.col(codes_col),
-        F.sequence(F.lit(0), F.lit(model.m - 1)),
-        lambda c, i: F.element_at(lut, (i * k + c + 1).cast("int")),
+    """Pure-codegen ADC distance: m lookups into the LUT, inlined as one
+    array literal, + a fold; one SQL expression whatever ``m * k``."""
+    lut = vector_literal_sql(adc_lut(model, query_vec))
+    return F.expr(
+        f"aggregate(zip_with({col_sql(codes_col)}, sequence(0, {model.m - 1}), "
+        f"(c, i) -> element_at({lut}, CAST(i * {model.k} + c + 1 AS INT))), "
+        f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
     )
-    return F.aggregate(looked, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def pq_search(
@@ -326,17 +327,7 @@ def search_pq_layout(
     cand = pq_search(codes, model, query_vec, shortlist, id_col=id_col)
     if base is None:
         return cand
-    qarr = F.array(*[F.lit(float(v)) for v in query_vec])
-    d = F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                F.col(vec_col), qarr,
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    d = F.expr(l2_sql(col_sql(vec_col), vector_literal_sql(query_vec)))
     return (
         base.join(F.broadcast(cand.select(id_col)), id_col, "left_semi")
         .withColumn("distance", d)

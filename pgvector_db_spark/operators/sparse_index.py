@@ -96,6 +96,7 @@ from pgvector_db_spark.functions.sparse import (
     sparse_indices,
     sparse_values,
 )
+from pgvector_db_spark.functions.vector import vector_literal_sql
 from pgvector_db_spark.sources.commitlog import (
     commit_json,
     file_lock,
@@ -463,8 +464,8 @@ class SparseIndex:
         rows = self._segment_union("vectors", meta["segments"]).join(
             cand, id_col, "left_semi"
         )
-        qi = F.array(*[F.lit(int(i)) for i in q_indices])
-        qv = F.array(*[F.lit(float(v)) for v in q_values])
+        qi = F.expr(f"array({', '.join(str(int(i)) for i in q_indices)})")
+        qv = F.expr(vector_literal_sql(q_values))
         scored = rows.withColumn("_qi", qi).withColumn("_qv", qv)
         if metric == "cosine":
             dist = sparse_cosine_distance("si", "sv", "_qi", "_qv")

@@ -91,6 +91,8 @@ def local_rows_df(spark: SparkSession, rows, schema, slice_rows: int = 100_000):
     large local collection still splits. Row conversion runs the same
     schema converter as the list form — rows, schema and null handling
     are identical (pinned in tests/test_utils_parallelism.py).
+    Classic Spark only: ``sparkContext`` (an RDD API) does not exist
+    under Spark Connect.
     """
     rows = rows if isinstance(rows, list) else list(rows)
     n_slices = max(1, -(-len(rows) // slice_rows))
@@ -99,22 +101,26 @@ def local_rows_df(spark: SparkSession, rows, schema, slice_rows: int = 100_000):
     )
 
 
-def local_relation_df(spark: SparkSession, rows: list, schema) -> DataFrame:
-    """Rows already on the driver as a ``LocalRelation`` frame: collecting
-    it, or a projection of it, starts no Spark job, where
-    ``createDataFrame(rows, schema)`` parallelizes the rows and its
-    collect runs one. The rows go through Arrow with pyspark's own
-    local-data converter; nullability is relaxed because that converter
-    rejects non-nullable nested fields."""
+def local_relation_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """Rows already on the driver, a list or a ``pyarrow.Table``, as a
+    ``LocalRelation`` frame: collecting it, or a projection of it, starts
+    no Spark job, where ``createDataFrame(rows, schema)`` parallelizes the
+    rows and its collect runs one. A list goes through Arrow with
+    pyspark's own local-data converter; nullability is relaxed because
+    that converter rejects non-nullable nested fields. Needs classic
+    Spark: it is tested there only, and under Spark Connect the
+    no-job collect is unverified."""
+    import pyarrow as pa
     from pyspark.sql.conversion import LocalDataToArrowConversion
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = _nullable(schema)
-    table = (
-        LocalDataToArrowConversion.convert(rows, schema, False)
-        if rows
-        else to_arrow_schema(schema).empty_table()
-    )
+    if isinstance(rows, pa.Table):
+        table = rows
+    elif rows:
+        table = LocalDataToArrowConversion.convert(rows, schema, False)
+    else:
+        table = to_arrow_schema(schema).empty_table()
     return spark.createDataFrame(table, schema)
 
 

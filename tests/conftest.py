@@ -23,6 +23,32 @@ def tables(spark):
     return load_tables(spark, SF_DIR)
 
 
+@pytest.fixture
+def py4j_round_trips(spark, monkeypatch):
+    """``count(fn)``: the py4j commands ``fn()`` sends to the JVM, not
+    counting py4j's release of collected Java objects, which the
+    collector sends at arbitrary times (bookkeeping, not planning)."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls[0] += 1
+        return send(command, *args, **kwargs)
+
+    def count(fn) -> int:
+        calls[0] = 0
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            fn()
+        return calls[0]
+
+    return count
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",

@@ -36,18 +36,28 @@ def test_search_returns_k(index, tables):
     assert dists == sorted(dists)
 
 
-def test_search_prunes_partitions(index, tables):
+def test_search_prunes_partitions(index, tables, monkeypatch):
     """nprobe=1 must read ONLY the probed list's partition (the whole
-    point of the index: unprobed lists are never read). Since r13 the
-    point query reads the probed ``list_id=`` directory DIRECTLY
+    point of the index: unprobed lists are never read). The serving
+    tier loads lists on their first probe under an index version, so on
+    a fresh version one search leaves exactly the probed list loaded.
+    The Spark fallback reads the probed ``list_id=`` directory DIRECTLY
     (basePath read, the r12 LSH fix — listing the non-probed dirs was
-    the dominant serving fixed cost), so the evidence is the plan's
-    actual input files, strictly stronger than a PartitionFilters
+    the dominant serving fixed cost), so there the evidence is the
+    plan's actual input files, strictly stronger than a PartitionFilters
     assert: every file read must lie under the one probed dir."""
     import re
 
+    import pgvector_db_spark.operators.ivf as ivf
+
     q = tables["embeddings"].filter("vec_id = 0").first()["embedding"]
     probe = index._rank_lists(list(q))[0][0]
+    ivf._VERSIONS.pop(index.path)
+    index.search(list(q), k=3, nprobe=1)
+    assert set(ivf._VERSIONS[index.path].lists) == {probe}
+
+    monkeypatch.setattr(ivf, "_RESIDENT_MAX_BYTES", 0)
+    ivf._VERSIONS.pop(index.path)
     df = index.search(list(q), k=3, nprobe=1)
     read_lists = {
         int(m.group(1))

@@ -329,23 +329,10 @@ def test_kcenter_coreset_matches_pure_python(spark):
     assert radii == sorted(radii, reverse=True)
 
 
-def test_knn_plan_round_trips_do_not_grow_with_dim(spark, monkeypatch):
+def test_knn_plan_round_trips_do_not_grow_with_dim(spark, py4j_round_trips):
     """Building ``knn``'s plan costs the same number of JVM round trips
     at 4 and at 768 dimensions: the query rides in as one SQL literal,
     not one ``F.lit`` call per element."""
-    from py4j.protocol import MEMORY_COMMAND_NAME
-
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    calls = [0]
-
-    def counting(command, *args, **kwargs):
-        # py4j also releases Java objects whose Python proxies died,
-        # whenever the collector frees them: bookkeeping, not planning
-        if not command.startswith(MEMORY_COMMAND_NAME):
-            calls[0] += 1
-        return send(command, *args, **kwargs)
-
     frames = {
         d: spark.createDataFrame(
             [(0, [1.0] * d)], "vec_id bigint, embedding array<double>"
@@ -353,13 +340,10 @@ def test_knn_plan_round_trips_do_not_grow_with_dim(spark, monkeypatch):
         for d in (4, 768)
     }
     knn(frames[4], [0.5] * 4, 3)  # warm any first-use lookups
-    counts = {}
-    monkeypatch.setattr(client, "send_command", counting)
-    for d, df in frames.items():
-        calls[0] = 0
-        knn(df, [0.5] * d, 3)
-        counts[d] = calls[0]
-    monkeypatch.undo()
+    counts = {
+        d: py4j_round_trips(lambda df=df, d=d: knn(df, [0.5] * d, 3))
+        for d, df in frames.items()
+    }
     assert counts[4] == counts[768] < 100, counts
 
 

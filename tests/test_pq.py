@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from pgvector_db_spark.catalog import load_tables
 from pgvector_db_spark.operators.pq import (
+    PQModel,
     adc_lut,
     build_pq_layout,
     encode_pq,
@@ -58,6 +59,31 @@ def test_adc_matches_numpy(emb, model):
     for vid, dist in got.items():
         expect = float(sum(lut[i, c] for i, c in enumerate(codes[vid])))
         assert dist == pytest.approx(expect, rel=1e-12)
+
+
+def test_pq_search_plan_round_trips_do_not_grow_with_codebook(
+    spark, py4j_round_trips
+):
+    """Building ``pq_search``'s plan costs the same few JVM round trips
+    at m=4, k=8 and at m=16, k=32: the ADC lookup table rides in as one
+    SQL literal, not one ``F.lit`` per entry."""
+    rng = np.random.default_rng(0)
+    codes = spark.createDataFrame(
+        [(0, [0] * 16)], "vec_id bigint, codes array<int>"
+    )
+    q = [float(x) for x in rng.normal(size=64)]
+
+    def plan(m, k):
+        model = PQModel(
+            m=m, k=k, dim=64, metric="l2",
+            codebooks=rng.normal(size=(m, k, 64 // m)),
+        )
+        return lambda: pq_search(codes, model, q, 5)
+
+    plan(4, 8)()  # warm any first-use lookups
+    small = py4j_round_trips(plan(4, 8))
+    large = py4j_round_trips(plan(16, 32))
+    assert small == large < 100, (small, large)
 
 
 def test_rerank_recovers_exact_top10(emb, model):
