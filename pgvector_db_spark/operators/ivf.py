@@ -349,6 +349,8 @@ class IVFIndex:
         v: _Version,
     ) -> DataFrame:
         """``_knn(_probed_data(...))`` evaluated on the driver."""
+        if k < 0:
+            raise ValueError(f"knn: k must be >= 0, got {k}")
         q = np.array([float(x) for x in query_vec], dtype=np.float64)
         lists = {lid: lst for lid, lst in lists.items() if lst.ids.size}
         for lst in lists.values():

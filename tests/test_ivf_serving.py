@@ -109,6 +109,14 @@ def test_wrong_dim_query_raises_the_knn_guard(built):
         idx.search([1.0, 2.0, 3.0], k=5, nprobe=NPROBE)
 
 
+def test_negative_k_raises_like_spark_limit(built):
+    idx = built("l2", 64, "float")
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        idx.search([0.5] * 64, k=-1, nprobe=NPROBE)
+    with pytest.raises(Exception, match="(?i)limit"):
+        _spark_rows(idx, [0.5] * 64, -1, NPROBE)
+
+
 def test_zero_norm_query_raises_under_cosine(built):
     idx = built("cosine", 64, "float")
     with pytest.raises(ZeroDivisionError, match="DIVIDE_BY_ZERO"):
