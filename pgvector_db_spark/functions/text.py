@@ -11,6 +11,19 @@ SQL-expressible so the DuckDB oracle replays it exactly:
   simhash    = per-bit majority vote over token hash32s
   fingerprint = sequential polynomial fold over characters
 
+One generator per MinHash primitive: ``char_shingles_sql``,
+``minhash_signature_sql`` and ``lsh_band_keys_sql`` write the Spark SQL
+text, and the Column builders of the same name are ``F.expr(<generator>)``
+over SQL-text arguments (a plain column name is one; ``col_sql`` quotes
+any other). A signature is one parsed expression, so building its plan
+costs the same few JVM calls at 16 hashes as at 64.
+
+Hex-min form: the md5 mode takes ``array_min`` over the 8-char hex
+prefixes and decodes the winner once per component, instead of decoding
+every (shingle, component) hash. Fixed-width lowercase hex sorts like
+its value ('0'-'9' < 'a'-'f' byte-wise), so the result is bitwise the
+per-shingle ``hash32`` fold the DuckDB oracle replays.
+
 Determinism: md5 is identical everywhere; min / majority / fold are either
 order-insensitive or sequentially folded, so results are bitwise equal
 across engines and partitionings.
@@ -35,14 +48,56 @@ def hash32(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
 
 
-def char_shingles(text: ColumnOrName, k: int = 5) -> Column:
-    """Distinct character k-grams (the MinHash input units)."""
-    t = _c(text)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.length(t) - (k - 1)),
-        lambda i: F.substring(t, i, k),
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def char_shingles_sql(text: str, k: int = 5) -> str:
+    """Distinct character k-grams of ``text`` (the MinHash input units)."""
+    return (
+        f"array_distinct(transform(sequence(1, length({text}) - {k - 1}), "
+        f"_p -> substring({text}, _p, {k})))"
     )
-    return F.array_distinct(grams)
+
+
+def minhash_signature_sql(
+    shingles: str,
+    num_hashes: int = 16,
+    prefix: str = "_mh",
+    hash_fn: str = "md5",
+) -> str:
+    """MinHash signature of the ``shingles`` array as array<bigint>:
+    component j is the minimum of hash(shingle, j) over the set. md5
+    components take the min over hex prefixes and decode it once (the
+    hex-min form, see the module docstring); xxhash64 components hash the
+    shingle with the component number."""
+
+    def comp(j: int) -> str:
+        if hash_fn == "xxhash64":
+            return f"array_min(transform({shingles}, _s -> xxhash64(_s, {j})))"
+        suffix = _sql_str(f"{prefix}{j}")
+        return (
+            f"CAST(conv(array_min(transform({shingles}, "
+            f"_s -> substring(md5(concat(_s, {suffix})), 1, 8))), 16, 10) AS BIGINT)"
+        )
+
+    return "array(" + ", ".join(comp(j) for j in range(num_hashes)) + ")"
+
+
+def lsh_band_keys_sql(sig: str, bands: int, rows_per_band: int) -> str:
+    """Band keys of signature ``sig``: md5 over each band's slice."""
+    keys = [
+        f"md5(concat('band{b}:', concat_ws(',', transform("
+        f"slice({sig}, {b * rows_per_band + 1}, {rows_per_band}), "
+        f"_x -> CAST(_x AS STRING)))))"
+        for b in range(bands)
+    ]
+    return "array(" + ", ".join(keys) + ")"
+
+
+def char_shingles(text: str, k: int = 5) -> Column:
+    """Distinct character k-grams (the MinHash input units)."""
+    return F.expr(char_shingles_sql(text, k))
 
 
 def tokens(text: ColumnOrName) -> Column:
@@ -51,7 +106,7 @@ def tokens(text: ColumnOrName) -> Column:
 
 
 def minhash_signature(
-    shingle_col: Column,
+    shingles: str,
     num_hashes: int = 16,
     prefix: str = "_mh",
     hash_fn: str = "md5",
@@ -63,32 +118,16 @@ def minhash_signature(
 
     ``hash_fn='md5'`` is the cross-engine (DuckDB-replicable) hash used by
     oracle-checked queries; ``'xxhash64'`` is the production path — the
-    same statistics at a fraction of the cost (one JVM hash vs an md5 +
-    hex decode per (shingle, component))."""
-
-    def comp(j: int) -> Column:
-        if hash_fn == "xxhash64":
-            return F.array_min(
-                F.transform(shingle_col, lambda s: F.xxhash64(s, F.lit(j)))
-            )
-        suffix = F.lit(f"{prefix}{j}")
-        return F.array_min(
-            F.transform(shingle_col, lambda s: hash32(F.concat(s, suffix)))
-        )
-
-    return F.array(*[comp(j) for j in range(num_hashes)])
+    same statistics at a fraction of the cost (one JVM hash vs an md5
+    per (shingle, component))."""
+    return F.expr(minhash_signature_sql(shingles, num_hashes, prefix, hash_fn))
 
 
-def lsh_band_keys(sig_col: Column, bands: int, rows_per_band: int) -> Column:
+def lsh_band_keys(sig: str, bands: int, rows_per_band: int) -> Column:
     """Band keys for LSH bucketing: md5 over each band's slice of the
     signature. Docs sharing ANY band key are candidate pairs — the
     banding turns O(n²) comparison into a shuffle on band keys."""
-    keys = []
-    for b in range(bands):
-        slice_ = F.slice(sig_col, b * rows_per_band + 1, rows_per_band)
-        joined = F.concat_ws(",", F.transform(slice_, lambda x: x.cast("string")))
-        keys.append(F.md5(F.concat(F.lit(f"band{b}:"), joined)))
-    return F.array(*keys)
+    return F.expr(lsh_band_keys_sql(sig, bands, rows_per_band))
 
 
 def jaccard(a: Column, b: Column) -> Column:

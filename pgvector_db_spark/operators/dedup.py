@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pgvector_db_spark.functions.text import (
-    char_shingles,
+    char_shingles_sql,
     hamming_distance,
     jaccard,
     lsh_band_keys,
@@ -39,7 +39,7 @@ from pgvector_db_spark.functions.text import (
     simhash,
     tokens,
 )
-from pgvector_db_spark.functions.vector import cosine_similarity
+from pgvector_db_spark.functions.vector import col_sql, cosine_similarity
 from pgvector_db_spark.utils import ensure_min_parallelism
 
 
@@ -55,6 +55,11 @@ def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
         .agg(F.min(id_col).alias(id_col))
     )
     return df.join(keep, id_col, "left_semi")
+
+
+def _xxhash_shingles_sql(shingles: str) -> str:
+    """The shingle array as its distinct int64 xxhash64 values."""
+    return f"array_distinct(transform({shingles}, _s -> xxhash64(_s)))"
 
 
 def minhash_lsh_pairs(
@@ -97,7 +102,7 @@ def minhash_lsh_pairs(
     ``None`` (off) preserves exact oracle parity.
     """
     rows_per_band = num_hashes // bands
-    shingles = char_shingles(F.col(text_col), shingle_k)
+    shingles = char_shingles_sql(col_sql(text_col), shingle_k)
     if hash_fn == "xxhash64":
         # Fast mode collapses shingle strings to int64 hashes ONCE, then
         # both the signature components and the exact-jaccard verification
@@ -107,19 +112,26 @@ def minhash_lsh_pairs(
         # collisions) — templated corpora push O(cluster²) candidate
         # pairs through verification, so the kernel cost is the bill.
         # The md5 mode keeps raw strings: it is the DuckDB-oracle path.
-        shingles = F.array_distinct(F.transform(shingles, lambda s: F.xxhash64(s)))
-    base = df.select(F.col(id_col), shingles.alias("_sh")).withColumn(
-        "_sig", minhash_signature(F.col("_sh"), num_hashes, hash_fn=hash_fn)
+        shingles = _xxhash_shingles_sql(shingles)
+    # the signature is the stage's whole cost (num_hashes hashes per
+    # distinct shingle): a single-file input scans as ONE partition, so
+    # spread it over the session's cores first
+    base = (
+        ensure_min_parallelism(df)
+        .select(F.col(id_col), F.expr(shingles).alias("_sh"))
+        .withColumn("_sig", minhash_signature("_sh", num_hashes, hash_fn=hash_fn))
     )
     # base feeds the band explode, BOTH sides of the candidate self-join,
-    # and both verification joins. Persist alone is not enough: the scans
-    # run in parallel first stages that race to populate the cache, each
-    # recomputing the lineage — materialize once, eagerly (MLlib's LSH
-    # does the same). Measured 37s -> ~8s at sf0.1.
-    base = base.persist()
+    # and both verification joins: materialize it once, eagerly, or the
+    # parallel first stages race to recompute the lineage (MLlib's LSH
+    # does the same; measured 37s -> ~8s at sf0.1). localCheckpoint, not
+    # persist(): a persisted frame stays registered with the cache
+    # manager, which then answers the next call over the same source
+    # path from the stale cache, and it is never released.
+    base = base.localCheckpoint(eager=True)
     n_docs = base.count()
     banded = base.withColumn(
-        "_bk", F.explode(lsh_band_keys(F.col("_sig"), bands, rows_per_band))
+        "_bk", F.explode(lsh_band_keys("_sig", bands, rows_per_band))
     ).select(id_col, "_bk")
 
     if max_band_docs is not None:
@@ -1005,10 +1017,13 @@ def simhash_pairs(
     some chunk), then exact hamming verification."""
     chunk_bits = bits // chunks
     mask = (1 << chunk_bits) - 1
+    # both sides of the chunk self-join reuse the fingerprints: pin them
+    # eagerly (parallel scan stages would race-recompute them), and with
+    # localCheckpoint, not persist(), so no later call over the same
+    # source is served from this call's cache
     base = df.select(
         F.col(id_col), simhash(F.col(text_col), bits).alias("_sh")
-    ).persist()  # both sides of the chunk self-join reuse the fingerprints
-    base.count()  # eager: parallel scan stages would race-recompute
+    ).localCheckpoint(eager=True)
     chunked = base.select(
         id_col,
         "_sh",
@@ -1373,18 +1388,16 @@ class MinHashIndex:
         self.threshold = threshold
 
     def _prepared(self, df: DataFrame) -> DataFrame:
-        shingles = char_shingles(F.col(self.text_col), self.shingle_k)
-        sh = F.array_distinct(F.transform(shingles, lambda s: F.xxhash64(s)))
-        base = df.select(F.col(self.id_col), sh.alias("_sh")).withColumn(
-            "_sig",
-            minhash_signature(F.col("_sh"), self.num_hashes, hash_fn="xxhash64"),
+        sh = _xxhash_shingles_sql(
+            char_shingles_sql(col_sql(self.text_col), self.shingle_k)
+        )
+        base = df.select(F.col(self.id_col), F.expr(sh).alias("_sh")).withColumn(
+            "_sig", minhash_signature("_sh", self.num_hashes, hash_fn="xxhash64")
         )
         banded = base.withColumn(
             "_bk",
             F.explode(
-                lsh_band_keys(
-                    F.col("_sig"), self.bands, self.num_hashes // self.bands
-                )
+                lsh_band_keys("_sig", self.bands, self.num_hashes // self.bands)
             ),
         ).select(self.id_col, "_sh", "_bk")
         return banded.withColumn(

@@ -182,7 +182,7 @@ class IVFIndex:
             .partitionBy("list_id")
             .parquet(os.path.join(path, "data"))
         )
-        local_rows_df(
+        local_relation_df(
             spark,
             list(enumerate(centers)),
             "list_id int, centroid array<double>",
@@ -545,6 +545,8 @@ class IVFIndex:
             for qv in [[float(x) for x in r[q_vec_col]]]
             for lid, _ in self._rank_lists(qv, v)[:nprobe]
         ]
+        # batch-sized (up to driver_batch_max·nprobe rows of vectors): too
+        # large to inline in a plan, so it stays a parallelized frame
         probe_df = local_rows_df(
             self.spark,
             pairs,
@@ -565,7 +567,7 @@ class IVFIndex:
         from pyspark.sql.window import Window
 
         v = v or self._load()
-        cents = local_rows_df(
+        cents = local_relation_df(
             self.spark,
             v.centers,
             "list_id int, _centroid array<double>, _cnorm double",
@@ -691,7 +693,7 @@ class IVFIndex:
                 metric=v.metric,
             )
 
-        cents = local_rows_df(
+        cents = local_relation_df(
             self.spark,
             [(lid, c) for lid, c, _ in v.centers],
             "list_id int, _centroid array<double>",
@@ -825,7 +827,7 @@ class IVFIndex:
             # the pre-r13 all-in-plan spelling cross-joined empty one-row
             # frames into an EMPTY result; keep that contract instead of
             # an IndexError on rows[0] (r13 ADVICE)
-            return local_rows_df(self.spark, [], _schema)
+            return local_relation_df(self.spark, [], _schema)
         k_total = int(rows[0]["k_total"])
         max_probe = rows[-1]["nprobe"]
         by_np = {r["nprobe"]: r for r in rows}
@@ -863,7 +865,7 @@ class IVFIndex:
             .alias("s")
         ).first()
         exact_sum = None if srow["s"] is None else int(srow["s"])
-        return local_rows_df(
+        return local_relation_df(
             self.spark,
             [
                 (
@@ -1023,7 +1025,7 @@ def _assign_lists(
     cents = [(i, c, fold_norm(c)) for i, c in enumerate(centers)]
     if metric == "cosine" and any(cn == 0.0 for _, _, cn in cents):
         raise ValueError("ivf: zero-norm list center has no cosine distance")
-    cents_df = local_rows_df(
+    cents_df = local_relation_df(
         df.sparkSession,
         [(cents,)],
         "_cents array<struct<list_id: int, centroid: array<double>,"
@@ -1073,7 +1075,7 @@ def _probe_cost(idx: IVFIndex, queries: DataFrame, nprobe: int,
     from pyspark.sql.window import Window
 
     v = idx._load()
-    cents = local_rows_df(
+    cents = local_relation_df(
         idx.spark,
         [(lid, c) for lid, c, _ in v.centers],
         "list_id int, _centroid array<double>",

@@ -4211,10 +4211,10 @@ def _duck_minhash(j: int, shingles: str = "s") -> str:
     tags=("dataset", "dedup"),
 )
 def ds_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pgvector_db_spark.functions.text import char_shingles, minhash_signature
+    from pgvector_db_spark.functions.text import char_shingles_sql, minhash_signature
 
     t = load_tables(spark, sf_dir)
-    sig = minhash_signature(char_shingles("text", 5), 4)
+    sig = minhash_signature(char_shingles_sql("text", 5), 4)
     return t["documents"].select(
         "doc_id",
         sig[0].alias("mh0"),

@@ -39,6 +39,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # one pass over the headline queries leaves ~82 generated classes
+        # in the codegen cache, and its default of 100 entries made warm
+        # passes recompile the same ~20 classes in most runs (about 15%
+        # slower); with room for 1000 they recompile nothing
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

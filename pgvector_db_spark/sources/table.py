@@ -14,7 +14,9 @@ equivalents (SURVEY.md §3.2-3.3):
   staging directory + filesystem rename into the table root).
 
 Vector-dimension enforcement replicates ``VECTOR(n)`` insert-time checks
-(pgvector rejects wrong-dim rows; here a pre-write validation count).
+(pgvector rejects wrong-dim rows): ``insert`` and ``upsert`` run a
+pre-write validation count; ``copy_from`` checks inside its staging write
+with ``raise_error``, so the bulk path reads its input once.
 
 Scale notes: all validation is distributed (no collect); the promote step
 moves file pointers via the Hadoop FileSystem API, so it works unchanged on
@@ -33,6 +35,10 @@ from pyspark.sql import functions as F
 class SchemaValidationError(ValueError):
     """Raised when an ingest DataFrame is missing required columns or
     violates a declared vector dimension (reference pg_insert.py:26-28)."""
+
+
+def _dim_error(col: str, dim: int) -> str:
+    return f"column {col!r}: rows violate VECTOR({dim}) dimension"
 
 
 class ParquetTable:
@@ -69,13 +75,16 @@ class ParquetTable:
 
     # -- validation ---------------------------------------------------------
 
-    def validate(self, df: DataFrame) -> None:
+    def _check_required(self, df: DataFrame) -> None:
         missing = [c for c in self.required_cols if c not in df.columns]
         if missing:
             # same error semantics as reference pg_insert.py:26-28
             raise SchemaValidationError(
                 f"DataFrame is missing required columns: {missing}"
             )
+
+    def validate(self, df: DataFrame) -> None:
+        self._check_required(df)
         for col, dim in self.vector_dims.items():
             if col not in df.columns:
                 continue
@@ -105,26 +114,47 @@ class ParquetTable:
         """Bulk load via staging + atomic promote.
 
         DataFrame or parquet-path input (reference pg_copy.py:39-45) is
-        written to ``<path>/_staging_<uuid>``, validated, then its files are
-        renamed into the table root in one pass and the staging dir removed
-        — the Spark equivalent of COPY-into-temp-table + INSERT..SELECT +
-        single commit (pg_copy.py:62-91). Returns rows loaded.
+        written to ``<path>/_staging_<uuid>``, then its files are renamed
+        into the table root in one pass and the staging dir removed — the
+        Spark equivalent of COPY-into-temp-table + INSERT..SELECT + single
+        commit (pg_copy.py:62-91). Returns rows loaded.
+
+        The ``VECTOR(n)`` check runs inside the staging write, one pass
+        over the input: a wrong-dim or null vector fails the write, the
+        staging dir is deleted, and the failure is raised as
+        :class:`SchemaValidationError` naming the column.
         """
         df = (
             self.spark.read.parquet(data) if isinstance(data, str) else data
         )
-        self.validate(df)
+        self._check_required(df)
+        for col, dim in self.vector_dims.items():
+            if col in df.columns:
+                v = F.col(col)
+                df = df.withColumn(
+                    col,
+                    F.when(v.isNotNull() & (F.size(v) == dim), v).otherwise(
+                        F.raise_error(F.lit(_dim_error(col, dim)))
+                    ),
+                )
 
         staging = f"{self.path.rstrip('/')}/_staging_{uuid.uuid4().hex}"
-        df.write.mode("overwrite").parquet(staging)
-        n = self.spark.read.parquet(staging).count()
-
         jvm = self.spark.sparkContext._jvm
         jsc = self.spark.sparkContext._jsc
         conf = jsc.hadoopConfiguration()
         src = jvm.org.apache.hadoop.fs.Path(staging)
         dst = jvm.org.apache.hadoop.fs.Path(self.path)
         fs = src.getFileSystem(conf)
+        try:
+            df.write.mode("overwrite").parquet(staging)
+        except Exception as e:
+            fs.delete(src, True)
+            for col, dim in self.vector_dims.items():
+                if _dim_error(col, dim) in str(e):
+                    raise SchemaValidationError(_dim_error(col, dim)) from e
+            raise
+        n = self.spark.read.parquet(staging).count()
+
         moved = 0
         for status in fs.listStatus(src):
             name = status.getPath().getName()

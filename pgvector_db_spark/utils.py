@@ -93,6 +93,12 @@ def local_rows_df(spark: SparkSession, rows, schema, slice_rows: int = 100_000):
     are identical (pinned in tests/test_utils_parallelism.py).
     Classic Spark only: ``sparkContext`` (an RDD API) does not exist
     under Spark Connect.
+
+    A frame whose size is bounded by a constant or a small parameter (a
+    ``lists``-row centroid table, a one-row result) belongs in
+    :func:`local_relation_df` instead: a ``LocalRelation`` is part of the
+    plan, so scanning or broadcasting it runs no Python-worker task at
+    all. Keep this one for driver collections that grow with the data.
     """
     rows = rows if isinstance(rows, list) else list(rows)
     n_slices = max(1, -(-len(rows) // slice_rows))
@@ -105,15 +111,17 @@ def local_relation_df(spark: SparkSession, rows, schema) -> DataFrame:
     """Rows already on the driver, a list or a ``pyarrow.Table``, as a
     ``LocalRelation`` frame: collecting it, or a projection of it, starts
     no Spark job, where ``createDataFrame(rows, schema)`` parallelizes the
-    rows and its collect runs one. A list goes through Arrow with
-    pyspark's own local-data converter; nullability is relaxed because
-    that converter rejects non-nullable nested fields. Needs classic
-    Spark: it is tested there only, and under Spark Connect the
-    no-job collect is unverified."""
+    rows and its collect runs one. ``schema`` is a ``StructType`` or a DDL
+    string. A list goes through Arrow with pyspark's own local-data
+    converter; nullability is relaxed because that converter rejects
+    non-nullable nested fields. Needs classic Spark: it is tested there
+    only, and under Spark Connect the no-job collect is unverified."""
     import pyarrow as pa
     from pyspark.sql.conversion import LocalDataToArrowConversion
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
     schema = _nullable(schema)
     if isinstance(rows, pa.Table):
         table = rows

@@ -72,6 +72,21 @@ def test_wrong_vector_dim_raises(spark, table):
         table.insert(_df(spark, [("bad", [0.1, 0.2])]))
 
 
+def test_copy_wrong_dim_raises_and_leaves_nothing(spark, table, tmp_path):
+    """copy_from checks VECTOR(n) inside its staging write: a wrong-dim
+    row fails the load, the staging dir is removed and no row lands."""
+    import os
+
+    table.insert(_df(spark, [("a", [0.1, 0.2, 0.3])]))
+    bad = _df(spark, [("b", [0.4, 0.5, 0.6]), ("c", [0.1, 0.2])])
+    with pytest.raises(SchemaValidationError, match="'embedding'.*VECTOR\\(3\\)"):
+        table.copy_from(bad)
+    assert not [f for f in os.listdir(table.path) if f.startswith("_staging")]
+    assert [r["text"] for r in table.read().collect()] == ["a"]
+    with pytest.raises(SchemaValidationError, match="VECTOR\\(3\\)"):
+        table.copy_from(_df(spark, [("n", None)]))
+
+
 def test_insert_batch_rows_controls_files(spark, table):
     df = _df(spark, [(f"t{i}", [float(i), 0.0, 0.0]) for i in range(10)])
     table.insert(df, batch_rows=5)

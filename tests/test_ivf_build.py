@@ -172,3 +172,18 @@ def test_build_and_append_share_one_shuffle_free_assignment(
         shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
         assert shuffles == 1, plan
         assert "Exchange hashpartitioning(list_id" in plan, plan
+
+
+def test_assign_lists_broadcasts_a_local_table(spark):
+    """The centroid table rides into the assignment as a LocalRelation
+    (part of the plan), not as a parallelized RDD whose broadcast runs a
+    Python-worker job."""
+    df = spark.range(4).selectExpr(
+        "id AS vec_id", "array(CAST(id AS FLOAT), 1.0F, 0.0F) AS embedding"
+    )
+    assigned = ivf._assign_lists(df, [[0.0, 1.0, 0.0], [3.0, 1.0, 0.0]], "l2", "embedding")
+    plan = assigned._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan and "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+    got = {r["vec_id"]: r["list_id"] for r in assigned.collect()}
+    assert got == {0: 0, 1: 0, 2: 1, 3: 1}

@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from pgvector_db_spark.functions.text import (
     char_shingles,
+    char_shingles_sql,
     doc_fingerprint,
     hamming_distance,
     hash32,
@@ -46,9 +50,128 @@ def test_char_shingles(spark):
 
 def test_minhash_identical_texts_same_signature(spark):
     df = spark.createDataFrame([("hello world text",), ("hello world text",)], "s string")
-    sigs = df.select(minhash_signature(char_shingles("s"), 16).alias("sig")).collect()
+    sigs = df.select(minhash_signature(char_shingles_sql("s"), 16).alias("sig")).collect()
     assert sigs[0]["sig"] == sigs[1]["sig"]
     assert len(sigs[0]["sig"]) == 16
+
+
+def _fold_signature(sh, n, hash_fn):
+    """The per-shingle fold spelled with Column functions: every
+    (shingle, component) hash decoded, then the minimum taken."""
+
+    def comp(j):
+        if hash_fn == "xxhash64":
+            return F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(j))))
+        return F.array_min(
+            F.transform(sh, lambda s: hash32(F.concat(s, F.lit(f"_mh{j}"))))
+        )
+
+    return F.array(*[comp(j) for j in range(n)])
+
+
+@pytest.mark.parametrize("parts", [1, 4])
+def test_minhash_signature_equals_per_shingle_hash32_fold(tables, parts):
+    """The one-expression signature (hex-min form under md5) is bitwise
+    the per-shingle hash fold, whatever the input partitioning."""
+    docs = tables["documents"].filter("doc_id < 300").repartition(parts)
+    docs = docs.unionByName(
+        docs.sparkSession.createDataFrame(
+            [(-1, ""), (-2, "abc"), (-3, None)], "doc_id bigint, text string"
+        ),
+        allowMissingColumns=True,
+    )
+    for hash_fn in ("md5", "xxhash64"):
+        rows = docs.select(
+            minhash_signature(char_shingles_sql("text"), 16, hash_fn=hash_fn).alias("a"),
+            _fold_signature(char_shingles("text"), 16, hash_fn).alias("b"),
+        ).collect()
+        assert len(rows) > 100
+        assert all(r["a"] == r["b"] for r in rows), hash_fn
+
+
+def _reference_pairs(docs, hash_fn, threshold=0.5):
+    """minhash_lsh_pairs recomputed from Column-built signatures and band
+    keys, with banding and exact jaccard done in Python."""
+    sh = char_shingles("text")
+    if hash_fn == "xxhash64":
+        sh = F.array_distinct(F.transform(sh, lambda s: F.xxhash64(s)))
+    sig = _fold_signature(F.col("_sh"), 16, hash_fn)
+    keys = [
+        F.md5(
+            F.concat(
+                F.lit(f"band{b}:"),
+                F.concat_ws(",", F.transform(F.slice(sig, 4 * b + 1, 4), lambda x: x.cast("string"))),
+            )
+        )
+        for b in range(4)
+    ]
+    rows = docs.select("doc_id", sh.alias("_sh")).select(
+        "doc_id", "_sh", F.array(*keys).alias("k")
+    ).collect()
+    buckets = {}
+    for r in rows:
+        for k in r["k"]:
+            buckets.setdefault(k, []).append(r)
+    out = {}
+    for members in buckets.values():
+        for a in members:
+            for b in members:
+                if a["doc_id"] < b["doc_id"]:
+                    sa, sb = set(a["_sh"]), set(b["_sh"])
+                    j = len(sa & sb) / len(sa | sb)
+                    if j >= threshold:
+                        out[(a["doc_id"], b["doc_id"])] = j
+    return out
+
+
+@pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
+def test_minhash_lsh_pairs_match_reference(tables, hash_fn):
+    docs = tables["documents"].filter("doc_id < 200")
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard_sim"]
+        for r in minhash_lsh_pairs(docs, hash_fn=hash_fn).collect()
+    }
+    assert got and got == _reference_pairs(docs, hash_fn)
+
+
+def test_minhash_plan_round_trips_do_not_grow_with_hashes(spark, py4j_round_trips):
+    """The signature and its band keys are one parsed expression each, so
+    building the pipeline costs the same JVM calls at 16 hashes as at 64."""
+    docs = spark.range(8).selectExpr(
+        "id AS doc_id", "concat('near duplicate text number ', id % 2) AS text"
+    )
+    minhash_lsh_pairs(docs)  # first-call JVM setup is not plan building
+    counts = {
+        n: py4j_round_trips(lambda n=n: minhash_lsh_pairs(docs, num_hashes=n))
+        for n in (16, 64)
+    }
+    assert counts[16] == counts[64], counts
+
+
+def _write_docs(path, texts):
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(1, len(texts) + 1), pa.int64()),
+                  "text": pa.array(texts)}),
+        path,
+    )
+
+
+@pytest.mark.parametrize("pairs_of", ["minhash", "simhash"])
+def test_pair_search_rereads_a_rewritten_source(spark, tmp_path, pairs_of):
+    """A second call over the same parquet path, after the file changed,
+    sees the new rows: the per-doc table of the first call must not be
+    left in Spark's cache, where the next plan over the path would find
+    it."""
+    fn = {"minhash": minhash_lsh_pairs, "simhash": simhash_pairs}[pairs_of]
+    path = str(tmp_path / "docs.parquet")
+    dup = "the quick brown fox jumps over the lazy dog near the river bank"
+    other = "completely unrelated words about spark query planning and codegen"
+    _write_docs(path, [dup, dup, other])
+    first = {(r["id_a"], r["id_b"]) for r in fn(spark.read.parquet(path)).collect()}
+    assert first == {(1, 2)}
+    _write_docs(path, [other, dup, dup])
+    second = {(r["id_a"], r["id_b"]) for r in fn(spark.read.parquet(path)).collect()}
+    assert second == {(2, 3)}
 
 
 def test_jaccard_bounds(spark):
