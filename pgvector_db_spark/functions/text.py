@@ -48,10 +48,6 @@ def hash32(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
 
 
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def char_shingles_sql(text: str, k: int = 5) -> str:
     """Distinct character k-grams of ``text`` (the MinHash input units)."""
     return (
@@ -75,10 +71,9 @@ def minhash_signature_sql(
     def comp(j: int) -> str:
         if hash_fn == "xxhash64":
             return f"array_min(transform({shingles}, _s -> xxhash64(_s, {j})))"
-        suffix = _sql_str(f"{prefix}{j}")
         return (
             f"CAST(conv(array_min(transform({shingles}, "
-            f"_s -> substring(md5(concat(_s, {suffix})), 1, 8))), 16, 10) AS BIGINT)"
+            f"_s -> substring(md5(concat(_s, '{prefix}{j}')), 1, 8))), 16, 10) AS BIGINT)"
         )
 
     return "array(" + ", ".join(comp(j) for j in range(num_hashes)) + ")"
