@@ -72,7 +72,7 @@ def test_wrong_vector_dim_raises(spark, table):
         table.insert(_df(spark, [("bad", [0.1, 0.2])]))
 
 
-def test_copy_wrong_dim_raises_and_leaves_nothing(spark, table, tmp_path):
+def test_copy_wrong_dim_raises_and_leaves_nothing(spark, table):
     """copy_from checks VECTOR(n) inside its staging write: a wrong-dim
     row fails the load, the staging dir is removed and no row lands."""
     import os
